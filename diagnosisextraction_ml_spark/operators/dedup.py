@@ -1323,21 +1323,37 @@ def dedup_incremental(
     the groupBy share the fingerprint partitioning). Row-identical
     output for unique ``id_col`` (the operator's contract — survivors
     are min-id representatives appendable to corpus + index).
+
+    Struct-min orders every column, so a map-typed column (at any
+    nesting depth) is rejected with ``ValueError``. Column names may
+    contain dots.
     """
-    normalized = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
+    from diagnosisextraction_ml_spark.sources.writers import orderable
+
+    for f in new_df.schema.fields:
+        if not orderable(f.dataType):
+            raise ValueError(
+                f"dedup_incremental: column {f.name!r} holds a map "
+                f"({f.dataType.simpleString()}); the min-id survivor "
+                f"aggregation cannot order maps — drop or convert it first"
+            )
+
+    def col(c: str) -> Column:
+        return F.col("`" + c.replace("`", "``") + "`")
+
+    normalized = F.regexp_replace(F.trim(col(text_col)), r"\s+", " ")
     other_cols = [c for c in new_df.columns if c != id_col]
     fp = new_df.select(
         F.md5(normalized).alias("fingerprint"),
-        F.struct(F.col(id_col), *[F.col(c) for c in other_cols]).alias("__row"),
+        F.struct(col(id_col), *[col(c) for c in other_cols]).alias("__row"),
     )
     survivors = (
         fp.join(seen_fingerprints.select("fingerprint"), "fingerprint", "left_anti")
         .groupBy("fingerprint")
         .agg(F.min("__row").alias("__row"))
     )
-    return survivors.select(
-        *[F.col(f"__row.{c}").alias(c) for c in new_df.columns]
-    )
+    # __row holds id first; restore the input's column order
+    return survivors.select("__row.*").select(*[col(c) for c in new_df.columns])
 
 
 def index_fingerprints(

@@ -1,41 +1,47 @@
-"""BM25 full-text retrieval — an inverted index as relational algebra.
+"""BM25 and query-likelihood full-text retrieval as relational algebra.
 
 North-star extension (no reference counterpart — the reference's only
 retrieval is the word-match regex, src/TextClassification.py:57-75):
 corpus search is a first-class need of a training-data pipeline
 (querying for contamination, curating topical subsets, building
 retrieval-augmented eval sets). Okapi BM25 with the Lucene idf variant
-is the standard ranking function, and it decomposes cleanly into
-DataFrame algebra:
+and Dirichlet-smoothed query likelihood are the standard ranking
+functions, and both decompose cleanly into DataFrame algebra.
 
-- **Index build** (one corpus pass, two shuffles): ``postings(term,
-  doc_id, tf)`` from an explode + groupBy; document length ``dl`` is
-  recovered from the postings themselves (Σ tf per doc — no second
-  tokenization) and joined back so scoring never touches a per-doc
-  side table; ``dfreq(term, df)`` is a vocabulary-sized aggregate.
-- **Scoring** (per query batch): query terms are a tiny literal
-  relation — the ``postings ⋈ query_terms`` broadcast join prunes the
-  index to the query vocabulary *before* anything wide happens, so
-  score work is proportional to the matched postings, not the corpus.
-  Corpus scalars (N, Σdl) ride along as a 1-row broadcast — Catalyst
-  folds the constant-key join to a BroadcastNestedLoopJoin whose build
-  side is a single row, the same plan scalar subqueries get: constant
-  append per row, nothing cartesian about it.
-- **Determinism**: idf is quantized to integer micro-nats the moment
-  it leaves ``ln`` (the engine's standard dodge for libm's last ulp);
-  each term's partial score is one exactly-rounded double
-  multiply-divide chain — written in the same association order in the
-  DuckDB oracle — rounded back to integer micro-units, and the per-doc
-  sum is then integer arithmetic, exact in any accumulation order.
-  Top-k carries the (score desc, doc_id asc) total order.
+Each scorer has one plan, whatever the batch's query or term count:
 
-At 100 TB: the index build is the same shape as word-count (Zipf-small
-vocabulary aggregate + postings shuffle partitioned by (term, doc));
-a query batch touches only the posting lists of its terms. Nothing is
-ever collected to the driver.
+- **One corpus scan** (:func:`_scan_term_tf`): per-doc ``dl`` and the
+  tf of every distinct batch term as narrow columns, no shuffle.
+- **One 1-row stats aggregate** (N, Σdl and per-term df or cf),
+  broadcast back — Catalyst plans the constant-key join as a
+  BroadcastNestedLoopJoin whose build side is a single row.
+- **Matched postings only**: the per-doc tf vector is exploded to the
+  (doc, term) rows with tf > 0, and each row's term score is computed
+  once, however many queries share the term.
+- **Queries are data, not expressions**: the metadata-sized
+  (query_id, term) relation is broadcast-joined to the matched rows,
+  then one long sum per (query, doc) and one per-query top-k window.
+  Generated code grows with the distinct terms (capped at
+  ``MAX_SCAN_TERMS``), never with the number of queries.
+- **Determinism**: idf and every ln are quantized to integer
+  micro-nats the moment they leave ``ln`` (the engine's standard dodge
+  for libm's last ulp); each term's partial score is one
+  exactly-rounded double multiply-divide chain — written in the same
+  association order in the DuckDB oracle — rounded back to integer
+  micro-units, and the per-doc sum is then integer arithmetic, exact
+  in any accumulation order. Top-k carries the (score desc, doc_id asc)
+  total order.
+
+``build_bm25_index`` is the amortized alternative for a standing
+workload wider than ``MAX_SCAN_TERMS``: the index build is the same
+shape as word-count (Zipf-small vocabulary aggregate + postings
+shuffle partitioned by (term, doc)). Nothing is ever collected to the
+driver.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -79,8 +85,8 @@ MAX_SCAN_TERMS = 256
 def _empty_topk(docs: DataFrame, id_col: str) -> DataFrame:
     """Zero-row (query_id, rank, id, score_micro) with the id column's
     real type taken from ``docs`` — the shape every ``*_topk`` returns,
-    used for the empty-query-batch early exit (an empty F.array() of
-    query structs is an AnalysisException, not an empty result)."""
+    used for the empty-query-batch early exit, which then never scans
+    the corpus."""
     return docs.select(
         F.lit("").alias("query_id"),
         F.lit(1).alias("rank"),
@@ -93,7 +99,8 @@ def _scan_term_tf(
     docs: DataFrame, terms: list[str], text_col: str, id_col: str
 ) -> DataFrame:
     """(id, dl, __tf0..__tfN) — per-doc term frequencies for a LITERAL
-    term batch, computed in one corpus scan with zero shuffle.
+    term batch, computed in one corpus scan with zero shuffle and
+    materialized once for the stats aggregate and the scoring pass.
 
     The query batch is metadata-sized by API contract, so per-doc tf of
     each term is a projection over the token array (|terms| counted
@@ -130,63 +137,89 @@ def _scan_term_tf(
         # as Spark's (element, index) variant
         return lambda x: x == F.lit(term)
 
-    return docs.select(
-        F.col(id_col),
-        F.size(toks).cast("long").alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t))).cast("long").alias(f"__tf{i}")
-            for i, t in enumerate(terms)
-        ],
-    ).filter(F.col("dl") > 0)
+    # localCheckpoint: the result is consumed twice — the 1-row stats
+    # aggregate AND the scoring pass. Left lazy, the tokenize +
+    # per-term counts re-run for each consumer (two full corpus scans;
+    # measured 1.94→1.44 s at sf0.1). The materialized relation is the
+    # NARROW (id, dl, tf…) projection — tiny next to the text it
+    # replaces — so the one-scan rule holds at 100 TB too.
+    return (
+        docs.select(
+            F.col(id_col),
+            F.size(toks).cast("long").alias("dl"),
+            *[
+                F.size(F.filter(toks, _eq(t))).cast("long").alias(f"__tf{i}")
+                for i, t in enumerate(terms)
+            ],
+        )
+        .filter(F.col("dl") > 0)
+        .localCheckpoint()
+    )
 
 
-# Measured dispatch threshold between the two scoring forms (r16,
-# tools/search_batch_probe.py at sf0.1): the INLINE form compiles one
-# per-query struct into the scoring projection — zero extra shuffle,
-# ideal for interactive batches, but generated-code size grows with
-# |queries| (10q 3.98 s → 100q 15.1 s; at 1000q janino FAILS to
-# compile the Generate stage outright). The BATCH form explodes only
-# MATCHED (doc, term) rows — codegen is O(|distinct terms|, capped at
-# MAX_SCAN_TERMS) regardless of |queries| — joins the broadcast
-# (query, term) relation (data, not expressions), and long-sums per
-# (query, doc). Scores are bit-identical: every per-term score is
-# quantized to an integer BEFORE summation, and long addition is
-# order-independent. Registry/oracle batches (3 queries) stay on the
-# inline plan unchanged.
-SMALL_QUERY_BATCH = 32
+def _query_batch(
+    docs: DataFrame, query_terms: list[tuple[str, str]]
+) -> tuple[list[str], DataFrame]:
+    """(distinct terms sorted, query relation) of a batch. The relation
+    (query_id, __ti, __nt) has one row per (query, term) occurrence — a
+    term repeated in a query counts twice — with __ti the term's index
+    in the sorted list and __nt the query's term count |q|."""
+    terms = sorted({t for _, t in query_terms})
+    tidx = {t: i for i, t in enumerate(terms)}
+    n_terms = Counter(qid for qid, _ in query_terms)
+    qt = docs.sparkSession.createDataFrame(
+        [(qid, tidx[t], n_terms[qid]) for qid, t in query_terms],
+        "query_id string, __ti int, __nt int",
+    )
+    return terms, qt
 
 
-def _batch_rank(per_doc: DataFrame, k: int, id_col: str) -> DataFrame:
+def _term_array(prefix: str, n: int):
+    return F.array(*[F.col(f"{prefix}{i}") for i in range(n)])
+
+
+def _rank_topk(
+    per_doc: DataFrame, k: int, id_col: str, score_col: str = "score_micro"
+) -> DataFrame:
+    """(query_id, rank, id, score) — the k best docs per query, ties on
+    id asc."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micro"), F.asc(id_col)
-    )
+    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.asc(id_col))
     return (
         per_doc.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score_micro")
+        .select("query_id", "rank", id_col, score_col)
     )
 
 
-def _bm25_topk_batch(
+def bm25_topk(
     docs: DataFrame,
-    terms: list[str],
-    by_query: dict[str, list[int]],
-    k: int,
-    text_col: str,
-    id_col: str,
+    query_terms: list[tuple[str, str]],
+    k: int = 10,
+    text_col: str = "text",
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Standing-workload BM25 scoring: matched-postings join form.
+    """Top-k documents per query: (query_id, rank, id, score_micro).
 
-    Same one-scan ``_scan_term_tf`` base and 1-row stats broadcast as
-    the inline form; scoring explodes the per-doc tf vector to MATCHED
-    (doc, term) rows only, computes the per-term score once per match
-    (independent of how many queries share the term), broadcast-joins
-    the metadata-sized (query_id, term_idx) relation, and long-sums
-    per (query, doc). See SMALL_QUERY_BATCH for the A/B that picked
-    the dispatch point."""
-    base = _scan_term_tf(docs, terms, text_col, id_col).localCheckpoint()
+    ``query_terms`` is [(query_id, term), ...] — already-tokenized
+    queries (a retrieval batch is metadata-sized by definition).
+    Scores are integer micro-nat-scaled BM25; ties break on id asc.
+
+    Plan: one :func:`_scan_term_tf` corpus pass, one 1-row stats/df
+    aggregate broadcast back, the per-doc tf vector exploded to
+    matched (doc, term) rows, one per-term score per row, a broadcast
+    join with the (query_id, term) relation, a long sum per (query,
+    doc) and one per-query top-k window. The arithmetic is the exact
+    expression chain of the indexed formulation (idf quantized to
+    micro-nats first, one rounded double chain per term, integer
+    per-doc sum), so scores are bit-identical to the DuckDB oracle
+    twin, which builds postings.
+    """
+    if not query_terms:
+        return _empty_topk(docs, id_col)
+    terms, qt = _query_batch(docs, query_terms)
+    base = _scan_term_tf(docs, terms, text_col, id_col)
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("total_dl"),
@@ -195,19 +228,20 @@ def _bm25_topk_batch(
             for i in range(len(terms))
         ],
     )
-    scored = base.crossJoin(F.broadcast(stats))
-    tf_arr = F.array(*[F.col(f"__tf{i}") for i in range(len(terms))])
-    df_arr = F.array(*[F.col(f"__df{i}") for i in range(len(terms))])
-    per_term = scored.select(
-        F.col(id_col),
-        F.col("dl"),
-        F.col("n_docs"),
-        (
-            F.col("total_dl").cast("double") / F.col("n_docs").cast("double")
-        ).alias("__avgdl"),
-        df_arr.alias("__dfs"),
-        F.posexplode(tf_arr).alias("__ti", "__tf"),
-    ).filter(F.col("__tf") > 0)
+    per_term = (
+        base.crossJoin(F.broadcast(stats))
+        .select(
+            F.col(id_col),
+            F.col("dl"),
+            F.col("n_docs"),
+            (
+                F.col("total_dl").cast("double") / F.col("n_docs").cast("double")
+            ).alias("__avgdl"),
+            _term_array("__df", len(terms)).alias("__dfs"),
+            F.posexplode(_term_array("__tf", len(terms))).alias("__ti", "__tf"),
+        )
+        .filter(F.col("__tf") > 0)
+    )
     dft = F.element_at("__dfs", F.col("__ti") + F.lit(1)).cast("double")
     idf_micro = (
         F.round(
@@ -238,215 +272,16 @@ def _bm25_topk_batch(
         )
         .cast("long")
     )
-    qt = docs.sparkSession.createDataFrame(
-        [(qid, ti) for qid, idxs in by_query.items() for ti in idxs],
-        "query_id string, __ti int",
-    )
     per_doc = (
         per_term.withColumn("__s", score)
         .join(F.broadcast(qt), "__ti")
         .groupBy("query_id", id_col)
         .agg(F.sum("__s").alias("score_micro"))
     )
-    return _batch_rank(per_doc, k, id_col)
-
-
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[tuple[str, str]],
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Top-k documents per query: (query_id, rank, id, score_micro).
-
-    ``query_terms`` is [(query_id, term), ...] — already-tokenized
-    queries (a retrieval batch is metadata-sized by definition).
-    Scores are integer micro-nat-scaled BM25; ties break on id asc.
-
-    Plan: one :func:`_scan_term_tf` corpus pass, one 1-row stats/df
-    aggregate broadcast back, then per-query scores as column
-    arithmetic and one per-query top-k window over matched docs. The
-    arithmetic is the exact expression chain of the indexed
-    formulation (idf quantized to micro-nats first, one rounded
-    double chain per term, integer per-doc sum), so scores — and the
-    DuckDB oracle twin, which still builds postings — are
-    bit-identical; a term with tf = 0 contributes an exact 0, so
-    summing all of a query's terms equals summing matched postings.
-    """
-    if not query_terms:
-        return _empty_topk(docs, id_col)
-    terms = sorted({t for _, t in query_terms})
-    tidx = {t: i for i, t in enumerate(terms)}
-    by_query: dict[str, list[int]] = {}
-    for qid, t in query_terms:
-        by_query.setdefault(qid, []).append(tidx[t])
-    if len(by_query) > SMALL_QUERY_BATCH:
-        return _bm25_topk_batch(docs, terms, by_query, k, text_col, id_col)
-
-    # localCheckpoint: `base` is consumed twice — the 1-row stats
-    # aggregate AND the scoring pass. Left lazy, the tokenize +
-    # per-term counts re-run for each consumer (two full corpus scans;
-    # measured 1.94→1.44 s at sf0.1). The materialized relation is the
-    # NARROW (id, dl, tf…) projection — tiny next to the text it
-    # replaces — so the one-scan rule holds at 100 TB too.
-    base = _scan_term_tf(docs, terms, text_col, id_col).localCheckpoint()
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("total_dl"),
-        *[
-            F.sum((F.col(f"__tf{i}") > 0).cast("long")).alias(f"__df{i}")
-            for i in range(len(terms))
-        ],
-    )
-    scored = base.crossJoin(F.broadcast(stats))
-
-    avgdl = F.col("total_dl").cast("double") / F.col("n_docs").cast("double")
-
-    def term_score(i: int):
-        idf_micro = (
-            F.round(
-                F.lit(1_000_000.0)
-                * F.log(
-                    (
-                        F.col("n_docs").cast("double")
-                        - F.col(f"__df{i}").cast("double")
-                        + F.lit(0.5)
-                    )
-                    / (F.col(f"__df{i}").cast("double") + F.lit(0.5))
-                    + F.lit(1.0)
-                ),
-                0,
-            )
-            .cast("long")
-        )
-        tf_d = F.col(f"__tf{i}").cast("double")
-        return (
-            F.round(
-                (idf_micro.cast("double") * (tf_d * F.lit(1.0 + BM25_K1)))
-                / (
-                    tf_d
-                    + F.lit(BM25_K1)
-                    * (
-                        F.lit(1.0 - BM25_B)
-                        + F.lit(BM25_B) * (F.col("dl").cast("double") / avgdl)
-                    )
-                ),
-                0,
-            )
-            .cast("long")
-        )
-
-    q_structs = []
-    for qid, idxs in by_query.items():
-        total = None
-        matched = None
-        for i in idxs:
-            s = term_score(i)
-            total = s if total is None else total + s
-            m = F.col(f"__tf{i}") > 0
-            matched = m if matched is None else (matched | m)
-        q_structs.append(
-            F.struct(
-                F.lit(qid).alias("query_id"),
-                total.alias("score_micro"),
-                matched.alias("matched"),
-            )
-        )
-    per_doc = (
-        scored.select(F.col(id_col), F.explode(F.array(*q_structs)).alias("q"))
-        .filter(F.col("q.matched"))
-        .select(
-            F.col("q.query_id").alias("query_id"),
-            F.col(id_col),
-            F.col("q.score_micro").alias("score_micro"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micro"), F.asc(id_col)
-    )
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score_micro")
-    )
+    return _rank_topk(per_doc, k, id_col)
 
 
 QLD_MU = 1000
-
-
-def _qld_topk_batch(
-    docs: DataFrame,
-    terms: list[str],
-    by_query: dict[str, list[int]],
-    k: int,
-    mu: int,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Standing-workload QLD scoring — same matched-postings join form
-    as :func:`_bm25_topk_batch`. The per-doc Dirichlet constant
-    ``|q|·ln(μ/(dl+μ))`` rides each matched row and re-attaches at the
-    aggregation (identical within a (query, doc) group, taken via
-    min); ``n_terms`` rides the broadcast query relation."""
-    base = _scan_term_tf(docs, terms, text_col, id_col).localCheckpoint()
-    stats = base.agg(
-        F.sum("dl").alias("total_dl"),
-        *[F.sum(f"__tf{i}").alias(f"__cf{i}") for i in range(len(terms))],
-    )
-    scored = base.crossJoin(F.broadcast(stats))
-    tf_arr = F.array(*[F.col(f"__tf{i}") for i in range(len(terms))])
-    cf_arr = F.array(*[F.col(f"__cf{i}") for i in range(len(terms))])
-    dl_term = F.round(
-        F.lit(1_000_000.0)
-        * F.log(
-            F.lit(float(mu)) / (F.col("dl").cast("double") + F.lit(float(mu)))
-        ),
-        0,
-    ).cast("long")
-    per_term = scored.select(
-        F.col(id_col),
-        F.col("total_dl"),
-        dl_term.alias("__dlt"),
-        cf_arr.alias("__cfs"),
-        F.posexplode(tf_arr).alias("__ti", "__tf"),
-    ).filter(F.col("__tf") > 0)
-    # tf > 0 ⇒ cf ≥ tf > 0, so the inline form's cf-guard is implied
-    cft = F.element_at("__cfs", F.col("__ti") + F.lit(1)).cast("double")
-    part = (
-        F.round(
-            F.lit(1_000_000.0)
-            * F.log(
-                F.lit(1.0)
-                + (F.col("__tf").cast("double") * F.col("total_dl").cast("double"))
-                / (F.lit(float(mu)) * cft)
-            ),
-            0,
-        )
-        .cast("long")
-    )
-    qt = docs.sparkSession.createDataFrame(
-        [
-            (qid, ti, len(idxs))
-            for qid, idxs in by_query.items()
-            for ti in idxs
-        ],
-        "query_id string, __ti int, __nt int",
-    )
-    per_doc = (
-        per_term.withColumn("__p", part)
-        .join(F.broadcast(qt), "__ti")
-        .groupBy("query_id", id_col)
-        .agg(
-            (
-                F.sum("__p")
-                + F.min("__nt").cast("long") * F.min("__dlt")
-            ).alias("score_micro")
-        )
-    )
-    return _batch_rank(per_doc, k, id_col)
 
 
 def qld_topk(
@@ -467,96 +302,71 @@ def qld_topk(
 
         Σ_{t∈q∩d} ln(1 + tf·|C| / (μ·cf_t))  +  |q| · ln(μ / (|d|+μ))
 
-    — the first part joins the query-pruned postings (broadcast of the
-    tiny query relation, same shape as BM25), the second is a per-doc
-    constant folded in at the aggregation. Both ln results are
-    quantized to integer micro-nats immediately (same discipline as
-    the idf path), so the per-doc sum is exact integer arithmetic and
-    the ranking is bit-identical across engines/partitionings.
+    Same plan as :func:`bm25_topk`: collection frequencies ride the
+    1-row stats aggregate, the first part is one score per matched
+    (doc, term) row summed per (query, doc) after the broadcast join
+    with the (query_id, term, |q|) relation; the second is a per-doc
+    constant that rides each matched row and is added once at the
+    aggregation. Both ln results are quantized to integer micro-nats
+    immediately, so the per-doc sum is exact integer arithmetic and the
+    ranking is bit-identical across engines/partitionings.
 
     Output: (query_id, rank, id, score_micro), ties on id asc.
     """
     if not query_terms:
         return _empty_topk(docs, id_col)
-    terms = sorted({t for _, t in query_terms})
-    tidx = {t: i for i, t in enumerate(terms)}
-    by_query: dict[str, list[int]] = {}
-    for qid, t in query_terms:
-        by_query.setdefault(qid, []).append(tidx[t])
-    if len(by_query) > SMALL_QUERY_BATCH:
-        return _qld_topk_batch(docs, terms, by_query, k, mu, text_col, id_col)
-
-    # Same one-scan plan as bm25_topk (see _scan_term_tf): collection
-    # frequencies ride the single stats aggregate, per-(query, doc)
-    # scores are column arithmetic — bit-identical to the indexed
-    # formulation because a tf = 0 term is an exact 0 in the matched
-    # sum (guarded, since cf may be 0 for a term absent from the
-    # corpus) and the dl part is a per-doc constant.
-    # localCheckpoint for the same two-consumer reason as bm25_topk.
-    base = _scan_term_tf(docs, terms, text_col, id_col).localCheckpoint()
+    terms, qt = _query_batch(docs, query_terms)
+    base = _scan_term_tf(docs, terms, text_col, id_col)
     stats = base.agg(
         F.sum("dl").alias("total_dl"),
         *[F.sum(f"__tf{i}").alias(f"__cf{i}") for i in range(len(terms))],
     )
-    scored = base.crossJoin(F.broadcast(stats))
-
-    def term_part(i: int):
-        return F.when(
-            F.col(f"__tf{i}") > 0,
-            F.round(
-                F.lit(1_000_000.0)
-                * F.log(
-                    F.lit(1.0)
-                    + (
-                        F.col(f"__tf{i}").cast("double")
-                        * F.col("total_dl").cast("double")
-                    )
-                    / (F.lit(float(mu)) * F.col(f"__cf{i}").cast("double"))
-                ),
-                0,
-            ).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-
     dl_term = F.round(
         F.lit(1_000_000.0)
-        * F.log(F.lit(float(mu)) / (F.col("dl").cast("double") + F.lit(float(mu)))),
+        * F.log(
+            F.lit(float(mu)) / (F.col("dl").cast("double") + F.lit(float(mu)))
+        ),
         0,
     ).cast("long")
-    q_structs = []
-    for qid, idxs in by_query.items():
-        total = None
-        matched = None
-        for i in idxs:
-            s = term_part(i)
-            total = s if total is None else total + s
-            m = F.col(f"__tf{i}") > 0
-            matched = m if matched is None else (matched | m)
-        q_structs.append(
-            F.struct(
-                F.lit(qid).alias("query_id"),
-                (total + F.lit(len(idxs)).cast("long") * dl_term).alias(
-                    "score_micro"
-                ),
-                matched.alias("matched"),
-            )
-        )
-    per_doc = (
-        scored.select(F.col(id_col), F.explode(F.array(*q_structs)).alias("q"))
-        .filter(F.col("q.matched"))
+    per_term = (
+        base.crossJoin(F.broadcast(stats))
         .select(
-            F.col("q.query_id").alias("query_id"),
             F.col(id_col),
-            F.col("q.score_micro").alias("score_micro"),
+            F.col("total_dl"),
+            dl_term.alias("__dlt"),
+            _term_array("__cf", len(terms)).alias("__cfs"),
+            F.posexplode(_term_array("__tf", len(terms))).alias("__ti", "__tf"),
+        )
+        .filter(F.col("__tf") > 0)
+    )
+    # tf > 0 ⇒ cf ≥ tf > 0, so the log argument is always finite
+    cft = F.element_at("__cfs", F.col("__ti") + F.lit(1)).cast("double")
+    part = (
+        F.round(
+            F.lit(1_000_000.0)
+            * F.log(
+                F.lit(1.0)
+                + (F.col("__tf").cast("double") * F.col("total_dl").cast("double"))
+                / (F.lit(float(mu)) * cft)
+            ),
+            0,
+        )
+        .cast("long")
+    )
+    # __dlt and __nt are constant within a (query, doc) group: min
+    # re-attaches them without a second join.
+    per_doc = (
+        per_term.withColumn("__p", part)
+        .join(F.broadcast(qt), "__ti")
+        .groupBy("query_id", id_col)
+        .agg(
+            (
+                F.sum("__p")
+                + F.min("__nt").cast("long") * F.min("__dlt")
+            ).alias("score_micro")
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_micro"), F.asc(id_col))
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score_micro")
-    )
+    return _rank_topk(per_doc, k, id_col)
 
 
 RRF_K = 60
@@ -595,11 +405,4 @@ def rrf_fuse(
     fused = contrib.groupBy("query_id", id_col).agg(
         F.sum("c").alias("rrf_micro")
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_micro"), F.asc(id_col))
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "rrf_micro")
-    )
+    return _rank_topk(fused, k, id_col, "rrf_micro")

@@ -106,18 +106,11 @@ def quality_score(col: Column | str, stopwords: Sequence[str] = ENGLISH_STOPWORD
     )
 
 
-def lang_id_expr(col: Column | str) -> Column:
-    """Heuristic language ID (en/nl/other) from stopword hit counts.
-
-    N-gram-free variant of the classic stopword profile method: count
-    distinct high-frequency function words per language in the text;
-    highest count wins, ties → 'other'. Pure expressions → codegen.
-    """
-    return lang_id_of(ws_tokens(col))
-
-
 def lang_id_of(toks: Column) -> Column:
-    """Language ID from pre-tokenized lowercase tokens."""
+    """Heuristic language ID (en/nl/other) from pre-tokenized lowercase
+    tokens: count hits on each language's high-frequency function
+    words; highest count wins, ties → 'other'. Pure expressions →
+    codegen."""
     en = F.array(*[F.lit(w) for w in ENGLISH_STOPWORDS[:40]])
     nl = F.array(*[F.lit(w) for w in DUTCH_STOPWORDS[:40]])
     n_en = F.size(F.filter(toks, lambda t: F.array_contains(en, t)))

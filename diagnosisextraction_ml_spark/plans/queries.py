@@ -111,12 +111,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# Oracle-side twin of the events nanos→micros conversion: the raw
-# parquet is TIMESTAMP_NS in DuckDB; CAST(.. AS TIMESTAMP) truncates to
-# microseconds, matching Spark's `ts DIV 1000` exactly.
-_TS = "CAST(ts AS TIMESTAMP)"
-
-
 # ===========================================================================
 # Relational core (S1, P4-P6, A2, A1, joins, windows)
 # ===========================================================================

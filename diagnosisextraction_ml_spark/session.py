@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads,
-single JVM), but every setting here is chosen to also be the right
-default on a 1000-executor cluster reading ~100 TB:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the host
+cores this process may run on, single JVM), but every setting here is
+chosen to also be the right default on a 1000-executor cluster reading
+~100 TB:
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   demote-to-broadcast) — on a real cluster this is what keeps the big
@@ -23,6 +24,12 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 
+def local_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the number of cores this process may
+    run on (its affinity mask, which honours taskset and cpusets)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "diagnosisextraction_ml_spark",
     master: str | None = None,
@@ -31,13 +38,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the same entry points run unchanged on a cluster where the master
-    is provided by spark-submit.
+    ``master`` defaults to ``local[<local_cpus()>]`` so the same entry
+    points run unchanged on a cluster where the master is provided by
+    spark-submit.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
-        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{local_cpus()}]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

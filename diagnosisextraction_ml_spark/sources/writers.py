@@ -15,6 +15,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 
+def orderable(dt) -> bool:
+    """Whether Spark can sort or compare values of type ``dt``: a map,
+    at any nesting depth, cannot be ordered."""
+    if isinstance(dt, MapType):
+        return False
+    if isinstance(dt, ArrayType):
+        return orderable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(orderable(f.dataType) for f in dt.fields)
+    return True
+
+
 def write_pipe_csv(
     df: DataFrame, path: str, sep: str = "|", single_file: bool = False, mode: str = "overwrite"
 ) -> None:
@@ -209,19 +221,10 @@ def write_training_shards(
     shard = (md5_hash64(F.col(key_col).cast("string")) % F.lit(n_shards)).cast("int")
     out = df.withColumn("shard", shard).repartition(n_shards, F.col("shard"))
     if sort_within:
-        def _orderable(dt) -> bool:
-            if isinstance(dt, MapType):
-                return False
-            if isinstance(dt, ArrayType):
-                return _orderable(dt.elementType)
-            if isinstance(dt, StructType):
-                return all(_orderable(f.dataType) for f in dt.fields)
-            return True
-
         sortable = [
             f.name
             for f in df.schema.fields
-            if f.name != key_col and _orderable(f.dataType)
+            if f.name != key_col and orderable(f.dataType)
         ]
         out = out.sortWithinPartitions("shard", key_col, *sortable)
     obs = None

@@ -303,6 +303,37 @@ def test_dedup_incremental_batch(spark):
     assert got == [12, 14]
 
 
+def test_dedup_incremental_dotted_column_names(spark):
+    """Column names containing dots (and an id column that is not
+    first) survive the struct round trip, in the input's order."""
+    from diagnosisextraction_ml_spark.operators.dedup import (
+        dedup_incremental,
+        index_fingerprints,
+    )
+
+    history = index_fingerprints(
+        spark.createDataFrame([(1, "seen")], "doc_id long, text string")
+    )
+    batch = spark.createDataFrame(
+        [("seen", "x", 10), ("fresh", "y", 12), ("fresh", "z", 11)],
+        "`t.x` string, `meta.src` string, `d.id` long",
+    )
+    out = dedup_incremental(batch, history, text_col="t.x", id_col="d.id")
+    assert out.columns == ["t.x", "meta.src", "d.id"]
+    assert [tuple(r) for r in out.collect()] == [("fresh", "z", 11)]
+
+
+def test_dedup_incremental_rejects_map_columns(spark):
+    from diagnosisextraction_ml_spark.operators.dedup import dedup_incremental
+
+    history = spark.createDataFrame([("0" * 32,)], "fingerprint string")
+    batch = spark.createDataFrame(
+        [(1, "a", {"k": 1})], "doc_id long, text string, attrs map<string,int>"
+    )
+    with pytest.raises(ValueError, match="'attrs' holds a map"):
+        dedup_incremental(batch, history)
+
+
 def test_duplicated_gram_stats_hand_case(spark):
     from diagnosisextraction_ml_spark.operators.dedup import duplicated_gram_stats
 

@@ -51,6 +51,37 @@ def _py_bm25(rows, queries, k1=search.BM25_K1, b=search.BM25_B):
     return out
 
 
+def _py_qld(rows, queries, mu=search.QLD_MU):
+    """Independent Dirichlet query-likelihood model: matched-term sum
+    plus |q| times the per-doc length term."""
+    docs = {i: (t or "").split() for i, t in rows}
+    docs = {i: t for i, t in docs.items() if t}
+    total_dl = sum(len(t) for t in docs.values())
+    cf = {}
+    for toks in docs.values():
+        for term in toks:
+            cf[term] = cf.get(term, 0) + 1
+    n_q = {}
+    for qid, _ in queries:
+        n_q[qid] = n_q.get(qid, 0) + 1
+    matched = {}
+    for qid, term in queries:
+        if term not in cf:
+            continue
+        for i, toks in docs.items():
+            tf = toks.count(term)
+            if not tf:
+                continue
+            s = round(1e6 * math.log(1.0 + (tf * total_dl) / (mu * cf[term])))
+            key = (qid, i)
+            matched[key] = matched.get(key, 0) + int(s)
+    return {
+        (qid, i): sm
+        + n_q[qid] * int(round(1e6 * math.log(mu / (len(docs[i]) + mu))))
+        for (qid, i), sm in matched.items()
+    }
+
+
 def test_bm25_matches_python_model(spark, corpus):
     queries = [("qa", "join"), ("qa", "hash"), ("qb", "window")]
     got = {
@@ -150,36 +181,6 @@ def test_bm25_and_qld_match_python_on_random_corpora(spark):
     (ranking included) must match an independent Python model."""
     import random
 
-    def py_qld(rows, queries, mu=search.QLD_MU):
-        docs = {i: (t or "").split() for i, t in rows}
-        docs = {i: t for i, t in docs.items() if t}
-        total_dl = sum(len(t) for t in docs.values())
-        cf = {}
-        for toks in docs.values():
-            for term in toks:
-                cf[term] = cf.get(term, 0) + 1
-        n_q = {}
-        for qid, _ in queries:
-            n_q[qid] = n_q.get(qid, 0) + 1
-        matched = {}
-        for qid, term in queries:
-            if term not in cf:
-                continue
-            for i, toks in docs.items():
-                tf = toks.count(term)
-                if not tf:
-                    continue
-                s = round(1e6 * math.log(1.0 + (tf * total_dl) / (mu * cf[term])))
-                key = (qid, i)
-                matched[key] = matched.get(key, 0) + int(s)
-        out = {}
-        for (qid, i), sm in matched.items():
-            dl = len(docs[i])
-            out[(qid, i)] = sm + n_q[qid] * int(
-                round(1e6 * math.log(mu / (dl + mu)))
-            )
-        return out
-
     vocab = ["aa", "bb", "cc", "dd", "ee", "ff", "gg"]
     for seed in (0, 1, 2):
         rng = random.Random(seed)
@@ -199,7 +200,7 @@ def test_bm25_and_qld_match_python_on_random_corpora(spark):
             (r.query_id, r.doc_id): r.score_micro
             for r in search.qld_topk(df, queries, k=100).collect()
         }
-        assert got_q == py_qld(rows, queries), ("qld", seed)
+        assert got_q == _py_qld(rows, queries), ("qld", seed)
 
 
 def test_empty_query_batch_returns_empty_frame(spark, corpus):
@@ -223,41 +224,17 @@ def test_wide_term_batch_rejected(spark, corpus):
         search.qld_topk(corpus, wide)
 
 
-def test_batch_dispatch_matches_inline_and_python(spark):
-    """The >SMALL_QUERY_BATCH join-form scorer (r16) must produce
-    byte-identical rows to the inline form and the Python model:
-    per-term scores are integer-quantized before summation, so the
-    two summation orders cannot diverge."""
-    import math
-    import random
+def _scores(out):
+    return {(r.query_id, r.doc_id): r.score_micro for r in out.collect()}
 
-    def py_qld(rows, queries, mu=search.QLD_MU):
-        docs = {i: (t or "").split() for i, t in rows}
-        docs = {i: t for i, t in docs.items() if t}
-        total_dl = sum(len(t) for t in docs.values())
-        cf = {}
-        for toks in docs.values():
-            for term in toks:
-                cf[term] = cf.get(term, 0) + 1
-        n_q = {}
-        for qid, _ in queries:
-            n_q[qid] = n_q.get(qid, 0) + 1
-        matched = {}
-        for qid, term in queries:
-            if term not in cf:
-                continue
-            for i, toks in docs.items():
-                tf = toks.count(term)
-                if not tf:
-                    continue
-                s = round(1e6 * math.log(1.0 + (tf * total_dl) / (mu * cf[term])))
-                key = (qid, i)
-                matched[key] = matched.get(key, 0) + int(s)
-        return {
-            (qid, i): sm
-            + n_q[qid] * int(round(1e6 * math.log(mu / (len(docs[i]) + mu))))
-            for (qid, i), sm in matched.items()
-        }
+
+def test_many_and_wide_query_batches_match_python(spark):
+    """Batches with many queries (40 x 2 terms) and with wide queries
+    (32 x 8 terms) must match the Python models exactly. Per-term
+    scores are integer-quantized before summation, so the join form's
+    summation order cannot diverge; the wide batch is the shape whose
+    generated code once grew with every (query, term) pair."""
+    import random
 
     vocab = ["aa", "bb", "cc", "dd", "ee", "ff", "gg", "hh"]
     rng = random.Random(7)
@@ -266,48 +243,32 @@ def test_batch_dispatch_matches_inline_and_python(spark):
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    # 40 queries (> SMALL_QUERY_BATCH=32) of 2 terms each, including a
-    # duplicated term in one query and a no-match term in another
+    # 40 queries of 2 terms each, including a duplicated term in one
+    # query and a no-match term in another
     queries = []
     for qi in range(40):
         queries.append((f"q{qi:02d}", vocab[qi % len(vocab)]))
         queries.append((f"q{qi:02d}", vocab[(qi + 3) % len(vocab)]))
     queries.append(("q00", vocab[0]))      # duplicate term in q00
     queries.append(("q01", "zz"))          # term absent from corpus
-    assert len({q for q, _ in queries}) > search.SMALL_QUERY_BATCH
+    assert _scores(search.bm25_topk(df, queries, k=100)) == _py_bm25(rows, queries)
+    assert _scores(search.qld_topk(df, queries, k=100)) == _py_qld(rows, queries)
 
-    got_b = {
-        (r.query_id, r.doc_id): r.score_micro
-        for r in search.bm25_topk(df, queries, k=100).collect()
-    }
-    assert got_b == _py_bm25(rows, queries)
-    got_q = {
-        (r.query_id, r.doc_id): r.score_micro
-        for r in search.qld_topk(df, queries, k=100).collect()
-    }
-    assert got_q == py_qld(rows, queries)
-
-    # inline-vs-batch equivalence on the SAME sub-batch (≤32 queries →
-    # public API takes the inline plan; the private batch form must
-    # agree row-for-row, rank included)
-    sub = [(q, t) for q, t in queries if q < "q08"]
-    terms = sorted({t for _, t in sub})
-    tidx = {t: i for i, t in enumerate(terms)}
-    by_query = {}
-    for qid, t in sub:
-        by_query.setdefault(qid, []).append(tidx[t])
-    inline_b = sorted(map(tuple, search.bm25_topk(df, sub, k=5).collect()))
-    batch_b = sorted(
-        map(tuple, search._bm25_topk_batch(df, terms, by_query, 5, "text", "doc_id").collect())
+    # 32 queries of 8 distinct terms each over a 24-term vocabulary
+    wide_vocab = [f"w{j:02d}" for j in range(24)]
+    wide_rows = [
+        (i, " ".join(rng.choice(wide_vocab) for _ in range(rng.randint(0, 20))))
+        for i in range(40)
+    ]
+    wide_df = spark.createDataFrame(wide_rows, "doc_id long, text string")
+    wide = [
+        (f"w{qi:02d}", t)
+        for qi in range(32)
+        for t in rng.sample(wide_vocab + ["zz"], 8)
+    ]
+    assert _scores(search.bm25_topk(wide_df, wide, k=100)) == _py_bm25(
+        wide_rows, wide
     )
-    assert inline_b == batch_b
-    inline_q = sorted(map(tuple, search.qld_topk(df, sub, k=5).collect()))
-    batch_q = sorted(
-        map(
-            tuple,
-            search._qld_topk_batch(
-                df, terms, by_query, 5, search.QLD_MU, "text", "doc_id"
-            ).collect(),
-        )
+    assert _scores(search.qld_topk(wide_df, wide, k=100)) == _py_qld(
+        wide_rows, wide
     )
-    assert inline_q == batch_q

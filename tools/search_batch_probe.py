@@ -1,18 +1,19 @@
-"""bm25/qld standing-workload probe (VERDICT r15 #6).
+"""bm25/qld batch-size probe.
 
-The registry's search_bm25_topk / search_qld_topk score a 3-query
-batch; their per-query top-k runs as a window over query_id. Spark
-4's WindowGroupLimit already performs two-level top-k (a PARTIAL
-rank-limit per map partition before the exchange, a FINAL one after),
-so the exchange carries at most k rows per (query, map partition) —
-the property a 10^4-query standing workload needs. This probe
-measures it instead of assuming it: synthesize N-query batches from
-the corpus' own frequent tokens (so every query matches documents),
-time the full scorer at each N on the same corpus, and record the
-wall + the plan's WindowGroupLimit/Exchange shape.
+Each scorer has one plan at every batch size: one corpus scan, a 1-row
+stats broadcast, matched (doc, term) rows joined to the broadcast
+(query_id, term) relation, a long sum per (query, doc) and a per-query
+top-k window (Spark 4's WindowGroupLimit ranks per map partition before
+the exchange, so it carries at most k rows per query and partition).
+This probe measures how that plan's cost grows with the query count:
+it builds N-query batches of two of the corpus' frequent tokens (so
+every query matches documents), times the full scorer at each N on one
+corpus, and records the wall and the plan's WindowGroupLimit/Exchange
+counts. The default sizes start at 3, the registry queries' batch.
 
 Usage: python tools/search_batch_probe.py [sf_dir] [n_list] [repeats]
-Defaults: /root/testdata/sf0.1  10,100,1000  2
+Defaults: the sf0.1 test data (TESTDATA.md), n_list 3,10,100,1000,
+repeats 2.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ if _REPO_ROOT not in sys.path:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    n_list = [int(x) for x in (sys.argv[2] if len(sys.argv) > 2 else "10,100,1000").split(",")]
+    n_list = [int(x) for x in (sys.argv[2] if len(sys.argv) > 2 else "3,10,100,1000").split(",")]
     repeats = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
     from pyspark.sql import functions as F

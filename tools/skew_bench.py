@@ -40,6 +40,8 @@ if _REPO_ROOT not in sys.path:
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from diagnosisextraction_ml_spark.session import local_cpus
+
 N_ENTRIES = 2_000_000
 N_KEYS = 100_000
 N_DOCS = 50_000
@@ -47,7 +49,7 @@ HOT_FRAC = 10  # 1/HOT_FRAC of rows/docs are hot
 
 
 def _spark() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("skew-bench")
