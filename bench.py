@@ -250,33 +250,38 @@ def main() -> int:
     # Each layout build gets its OWN try/except: if one build throws,
     # the later layouts must still be warmed — otherwise their one-time
     # write cost lands in the first timed iteration of their headline
-    # queries, exactly the skew this warmup exists to prevent. Failed
+    # queries, exactly the skew this warmup exists to prevent. _layout
+    # falls back to the plain scan instead of raising, so a build
+    # counts as failed when its published directory is absent. Failed
     # builds are recorded in the JSON so a partially-warmed run is
     # visible, not silent.
     layout_warmup_sec = None
     layout_warmup_failed: list[str] = []
     try:
         from diagnosisextraction_ml_spark.plans.queries import (
-            _bucketed_fact,
-            _bucketed_lineitem,
-            _bucketed_partitioned_fact,
-            _partitioned_fact,
+            _bucketed_base_dir,
+            _layout,
+            _layout_name,
         )
 
-        builds = [
-            ("lineitem/l_orderkey", lambda: _bucketed_lineitem(spark, sf_dir)),
-            ("orders/o_orderkey", lambda: _bucketed_fact(spark, sf_dir, "orders", "o_orderkey")),
-            ("lineitem/l_partkey", lambda: _bucketed_fact(spark, sf_dir, "lineitem", "l_partkey")),
-            ("lineitem/l_shipmonth", lambda: _partitioned_fact(spark, sf_dir, "lineitem", "l_shipmonth")),
-            ("events/event_day", lambda: _partitioned_fact(spark, sf_dir, "events", "event_day")),
-            ("lineitem/l_orderkey+l_shipmonth", lambda: _bucketed_partitioned_fact(
-                spark, sf_dir, "lineitem", "l_orderkey", "l_shipmonth")),
+        builds = [  # tag, (source, key, part_col)
+            ("lineitem/l_orderkey", ("lineitem", "l_orderkey", None)),
+            ("orders/o_orderkey", ("orders", "o_orderkey", None)),
+            ("lineitem/l_partkey", ("lineitem", "l_partkey", None)),
+            ("lineitem/l_shipmonth", ("lineitem", None, "l_shipmonth")),
+            ("events/event_day", ("events", None, "event_day")),
+            ("lineitem/l_orderkey+l_shipmonth", ("lineitem", "l_orderkey", "l_shipmonth")),
         ]
         _t0 = time.time()
-        for tag, build in builds:
+        for tag, layout in builds:
             try:
-                build()
+                _layout(spark, sf_dir, *layout)
+                built = os.path.isdir(
+                    os.path.join(_bucketed_base_dir(), _layout_name(sf_dir, *layout))
+                )
             except Exception:  # noqa: BLE001 — one layout must not skip the rest
+                built = False
+            if not built:
                 layout_warmup_failed.append(tag)
         # one-time storage cost, amortized across every layout query —
         # reported for transparency, never added to per-query timings

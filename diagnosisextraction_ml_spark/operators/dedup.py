@@ -27,9 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from diagnosisextraction_ml_spark.functions.hashing import M31, md5_hash64
+from diagnosisextraction_ml_spark.functions.hashing import KNUTH, M31, md5_hash64
 
-KNUTH = 2654435761
+# Shingling runs at the input's parallelism: fan_out spreads a narrow
+# (1-2 partition) scan so tokenize+zip+concat is not pinned to 1-2 cores.
+from diagnosisextraction_ml_spark.functions.partitioning import fan_out
 
 
 # --------------------------------------------------------------------------
@@ -150,17 +152,6 @@ def _gram_col(text_col: str, n: int):
     return F.when(sz >= n, full).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Shingling runs at the INPUT's parallelism, so a narrow source
-    (a 1-2 partition single-file scan) would pin the tokenize+zip+
-    concat CPU to 1-2 cores; see functions.partitioning.fan_out (the
-    shared helper — no-op for wide scans, the 100 TB case, and for
-    shuffle-produced inputs)."""
-    from diagnosisextraction_ml_spark.functions.partitioning import fan_out
-
-    return fan_out(df)
-
-
 def shingle_arrays(
     df: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:
@@ -168,7 +159,7 @@ def shingle_arrays(
     word n-gram shingles, kept in array form (no explode, no shuffle).
     ``array_remove`` (a codegen builtin, not a higher-order lambda)
     drops the empty-doc "" shingle."""
-    return _fan_out(df).select(
+    return fan_out(df).select(
         F.col(id_col),
         F.array_remove(F.array_distinct(_gram_col(text_col, n)), "").alias("__grams"),
     )
@@ -182,7 +173,7 @@ def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame
     codegen, measured faster than an extra array pass for the
     many consumers that want rows anyway."""
     return (
-        _fan_out(df)
+        fan_out(df)
         .select(
             F.col(id_col),
             F.explode(F.array_distinct(_gram_col(text_col, n))).alias("shingle"),
@@ -239,7 +230,7 @@ def _minhash_wide_arrays(
         lambda g: g.isNotNull() & (g != ""),
     )
     base = (
-        _fan_out(df)
+        fan_out(df)
         .select(F.col(id_col), grams.alias("__g"))
         .filter(F.size("__g") > 0)
     )
@@ -363,14 +354,6 @@ def minhash_lsh_pairs(
     be two semantics in one column, and NULL makes the column
     impossible to misread as a similarity signal.
     """
-    if k % bands != 0:
-        # The fused band construction enumerates exactly `bands` bands of
-        # k//bands rows; a non-divisible (k, bands) would silently drop
-        # the trailing hash rows and change the S-curve.
-        raise ValueError(
-            f"minhash_lsh_pairs needs k divisible by bands, got k={k}, "
-            f"bands={bands} (k % bands = {k % bands})"
-        )
     if collapse_exact:
         groups = (
             df.groupBy(F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("__fp"))
@@ -392,34 +375,7 @@ def minhash_lsh_pairs(
         ).localCheckpoint()
     else:
         reps = df.select(F.col(id_col), F.col(text_col))
-    wide = _minhash_wide(reps, text_col, id_col, shingle_n, k)
-    rows_per_band = k // bands
-    # Band keys straight off the wide signature row: each band's key is
-    # concat of its rows' minhash columns (i-order), built as ONE
-    # Generate of `bands` (band, key) structs per doc. The earlier long
-    # form exploded k rows per doc and re-grouped on (id, band) — a
-    # second k·|docs|-row shuffle that this fusion removes entirely.
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"h{i}").cast("string")
-                    for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                ],
-            ).alias("band_key"),
-        )
-        for b in range(bands)
-    ]
-    buckets = wide.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("b")
-    ).select(
-        F.col(id_col),
-        F.md5(
-            F.concat_ws("|", F.col("b.band").cast("string"), F.col("b.band_key"))
-        ).alias("bucket"),
-    )
+    buckets = band_buckets(reps, text_col, id_col, shingle_n, k, bands)
     if collapse_exact:
         member_lists = reps.select(F.col(id_col), F.col("__members"))
         ids = (
@@ -770,8 +726,6 @@ def embedding_near_dup_pairs(
     # 1-2 partitions — pinning the CPU-dominant verify to 1-2 cores
     # (the same narrow-scan disease as dedup.shingles; measured 193s at
     # sf1 on ~2 cores). Fan out once; no-op for wide scans.
-    from diagnosisextraction_ml_spark.functions.partitioning import fan_out
-
     df = fan_out(df)
 
     # Norms are per-VECTOR facts: computing them in the side projections
@@ -1197,11 +1151,20 @@ def band_buckets(
     can persist and probe the identical bucket space.
     """
     if k % bands != 0:
+        # The band construction enumerates exactly `bands` bands of
+        # k//bands rows; a non-divisible (k, bands) would silently drop
+        # the trailing hash rows and change the S-curve.
         raise ValueError(
-            f"band_buckets needs k divisible by bands, got k={k}, bands={bands}"
+            f"LSH banding needs k divisible by bands, got k={k}, "
+            f"bands={bands} (k % bands = {k % bands})"
         )
     wide = _minhash_wide(df, text_col, id_col, shingle_n, k)
     rows_per_band = k // bands
+    # Band keys straight off the wide signature row: each band's key is
+    # concat of its rows' minhash columns (i-order), built as ONE
+    # Generate of `bands` (band, key) structs per doc. The earlier long
+    # form exploded k rows per doc and re-grouped on (id, band) — a
+    # second k·|docs|-row shuffle that this fusion removes entirely.
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -1429,8 +1392,6 @@ def _dup_gram_positions(
     # parallelism — a no-op at scale, where a 100 TB scan already has
     # thousands of splits (this is the one place the family shuffles
     # text, and only in the small-input regime).
-    from diagnosisextraction_ml_spark.functions.partitioning import fan_out
-
     df = fan_out(df)
     toks = F.filter(
         F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
@@ -1721,8 +1682,6 @@ def semantic_dedup(
     # input's parallelism, and a small single-file scan pins them to
     # 1-2 cores. The checkpointed assignment inherits the fanned-out
     # partitioning, so the pair join parallelizes too.
-    from diagnosisextraction_ml_spark.functions.partitioning import fan_out
-
     emb = fan_out(emb)
     if method == "numpy":
         from diagnosisextraction_ml_spark.operators.similarity import (

@@ -45,6 +45,10 @@ from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import md5_hash64
 
+# The trigram explode runs at the input's parallelism: fan_out spreads a
+# narrow (single-file) scan so the CPU is not pinned to 1-2 cores.
+from diagnosisextraction_ml_spark.functions.partitioning import fan_out
+
 LANGID_N = 3
 LANGID_BUCKETS = 4096
 
@@ -65,23 +69,13 @@ def _grams_expr(n: int = LANGID_N) -> Column:
     )
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Trigram explode runs at the input's parallelism — fan a narrow
-    (single-file) scan out to the session default so the CPU isn't
-    pinned to 1-2 cores (same guard as dedup.shingle_arrays; no-op for
-    wide scans and shuffle-produced inputs)."""
-    from diagnosisextraction_ml_spark.functions.partitioning import fan_out
-
-    return fan_out(df)
-
-
 def _bucket_counts(
     df: DataFrame, text_col: str, keys: list[str], n_buckets: int
 ) -> DataFrame:
     """(keys..., lid_bucket, nb) — trigram bucket multiplicities."""
     t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     return (
-        _fan_out(df).select(*keys, t.alias("_lid_t"))
+        fan_out(df).select(*keys, t.alias("_lid_t"))
         .select(*keys, F.explode(_grams_expr()).alias("g"))
         .select(*keys, (md5_hash64(F.col("g")) % F.lit(n_buckets)).alias("lid_bucket"))
         .groupBy(*keys, "lid_bucket")
@@ -161,7 +155,7 @@ def score_langid(
     (sf1: 10s → ~4s.)
     """
     t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    docs = _fan_out(df).select(F.col(id_col), t.alias("_lid_t"))
+    docs = fan_out(df).select(F.col(id_col), t.alias("_lid_t"))
     ntri = docs.select(
         F.col(id_col),
         F.greatest(

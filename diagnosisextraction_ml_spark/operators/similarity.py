@@ -26,9 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from diagnosisextraction_ml_spark.functions.hashing import M31, md5_hash64
-
-KNUTH = 2654435761
+from diagnosisextraction_ml_spark.functions.hashing import KNUTH, M31, md5_hash64
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -837,7 +835,7 @@ def gram_matrix_quantized(
     )
     # The dim·(dim+1)/2 fan-out runs at the input's parallelism — fan a
     # narrow (single-file) scan out to the session default first (same
-    # guard as langid._fan_out; no-op for wide scans).
+    # guard as langid's fan_out; no-op for wide scans).
     from diagnosisextraction_ml_spark.functions.partitioning import fan_out
 
     df = fan_out(df)

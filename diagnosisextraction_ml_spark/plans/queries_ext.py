@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import (
+    KNUTH,
     M31,
     knuth_bucket_sql,
     md5_hash64,
@@ -46,7 +47,6 @@ from diagnosisextraction_ml_spark.operators import funnel as funnel_ops
 from diagnosisextraction_ml_spark.operators import rollup as rollup_ops
 from diagnosisextraction_ml_spark.plans.queries import _t, register
 
-KNUTH = 2654435761
 
 # A fixed suffix containing artefacts/accents/digits/punctuation so the
 # cleaning queries actually exercise every replacement rule even though
@@ -6487,7 +6487,7 @@ _woe_entry()
 # that decides which third of a crawl becomes training data.
 # ===========================================================================
 
-def _ccnet_sql() -> str:
+def _ccnet_tercile_sql() -> str:
     """The (already green) bigram-LM scoring CTEs + per-language exact
     tercile cutoffs (order statistics off a per-language window cumsum
     — ties resolve to the lower bucket in both engines) + the final
@@ -6527,7 +6527,7 @@ def _ccnet_sql() -> str:
     """
 
 
-def _ccnet_buckets(spark, sf_dir):
+def _ccnet_terciles(spark, sf_dir):
     """head/middle/tail per language by bigram-LM score.
 
     Plan shape: the LM train+score plan (one pass over EN docs for
@@ -6595,7 +6595,7 @@ def _ccnet_buckets(spark, sf_dir):
     )
 
 
-register("pipeline_ccnet_buckets", _ccnet_sql())(_ccnet_buckets)
+register("pipeline_ccnet_buckets", _ccnet_tercile_sql())(_ccnet_terciles)
 
 
 # ===========================================================================

@@ -12,7 +12,7 @@ partition pruning).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed_table(
@@ -40,7 +40,3 @@ def write_bucketed_table(
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -27,44 +27,18 @@ Day-partitioning a 100 TB/year table gives ~275 GB/day — right-sized;
 minute-partitioning would create millions of tiny directories and the
 listing would dominate. Too-fine partitioning is the classic failure
 mode of this layout.
+
+Within each partition the writer sorts on the fine-grained column the
+partition value derives from, so row-group min/max statistics become
+tight and predicate pushdown skips row groups INSIDE the surviving
+directories — file-internal pruning composing with directory pruning
+(tests/test_partitioned.py pins the ~4× span tightening). The writer
+is ``plans.queries._layout``; this module keeps the read.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-
-
-def write_partitioned_table(
-    df: DataFrame, path: str, part_col: str, sort_col: str | None = None
-) -> None:
-    """Write ``df`` as parquet partitioned by ``part_col`` (one
-    directory per distinct value, ``part_col=value/`` Hive layout).
-    ``part_col`` must already exist on ``df`` (use
-    :func:`with_partition_col`). Readers that filter on ``part_col``
-    prune directories at listing time.
-
-    ``sort_col`` (typically the fine-grained time column the partition
-    value derives from) clusters values inside each written file, so
-    row-group min/max statistics become tight and predicate pushdown
-    skips row groups WITHIN the surviving directories — file-internal
-    pruning composing with directory pruning
-    (tests/test_partitioned.py pins the ~4× span tightening)."""
-    if sort_col is not None:
-        df = df.sortWithinPartitions(part_col, sort_col)
-    df.write.mode("overwrite").partitionBy(part_col).parquet(path)
-
-
-def with_partition_col(df: DataFrame, name: str, expr: Column) -> DataFrame:
-    """Attach the derived partition column. Shared by the layout writer
-    and the plain-scan fallback so both paths expose an identical
-    schema — the layout is performance, never a correctness
-    dependency. Identical is enforced, not assumed: the layout read
-    pins this DataFrame's schema (see :func:`read_partitioned_table`),
-    because Spark's partition-value inference would otherwise turn
-    ``yyyy-MM-dd`` values into DATE and always append the partition
-    column at the end of the schema, while this fallback keeps it a
-    STRING in derivation position."""
-    return df.withColumn(name, expr)
+from pyspark.sql import DataFrame, SparkSession
 
 
 def read_partitioned_table(spark: SparkSession, path: str, schema=None) -> DataFrame:

@@ -15,6 +15,7 @@ Parity notes:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,28 +96,43 @@ def read_predictions(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.csv(path, sep="|", header=True, schema=PREDICTIONS_SCHEMA)
 
 
-# Session-scoped reader memo: (applicationId, sf_dir, table) → the
-# ANALYZED reader DataFrame. spark.read.parquet() re-lists the path and
-# re-reads footers for schema on EVERY call — measured 20-60 ms of
-# driver-side work per table per query at sf0.1, and a full remote
-# listing per query at warehouse scale. A catalog resolves a table's
-# schema once per session; this memo is exactly that behavior (the
-# DuckDB anchor likewise registers its parquet views once per
-# session). No DATA is cached: the memo holds a lazy plan, every
-# action still scans the parquet files. Keyed by applicationId so a
-# stopped/restarted session can never serve stale plans, plus a cheap
-# freshness token (path mtime_ns + size) so regenerating a table's
-# files inside one application invalidates the memoized listing
-# instead of serving a stale file set (r16, ADVICE).
-_READER_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _freshness_token(path: str) -> tuple:
     try:
         st = os.stat(path)
         return (st.st_mtime_ns, st.st_size)
     except OSError:
         return (None, None)
+
+
+def session_memo(
+    spark: SparkSession, path: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The DataFrame over ``path`` memoized on ``spark`` itself, built
+    by ``build()`` on a miss.
+
+    spark.read.parquet() re-lists the path and re-reads footers for
+    schema on EVERY call — measured 20-60 ms of driver-side work per
+    table per query at sf0.1, and a full remote listing per query at
+    warehouse scale; a catalog lookup of a published layout costs
+    ~50-100 ms more. A catalog resolves a table once per session, and
+    this memo is exactly that. No DATA is cached: an entry is a lazy
+    plan, every action still scans the files.
+
+    The memo lives on the session object, so a ``newSession()`` child
+    (own conf, own temp views) never receives a DataFrame bound to its
+    parent, and a stopped session takes its memo with it. It holds one
+    entry per path, tagged with the path's freshness token (mtime_ns +
+    size); a changed token — regenerated files, a republished or
+    removed layout — REPLACES the entry instead of serving a stale file
+    listing.
+    """
+    memo = vars(spark).setdefault("_table_memo", {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == _freshness_token(path):
+        return hit[1]
+    df = build()
+    memo[path] = (_freshness_token(path), df)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -139,21 +155,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - TIMESTAMP: already canonical, no-op.
     """
     path = f"{os.path.realpath(sf_dir)}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, path, _freshness_token(path))
-    memo = _READER_MEMO.get(key)
-    if memo is not None:
-        return memo
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _READER_MEMO[key] = df
+    return session_memo(spark, path, lambda: _read_parquet(spark, sf_dir, name))
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    if name != "events":
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from diagnosisextraction_ml_spark.sources.bucketed import read_table, write_bucketed_table
+from diagnosisextraction_ml_spark.sources.bucketed import write_bucketed_table
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
@@ -20,8 +20,8 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         li.withColumnRenamed("l_orderkey", "o_orderkey"), "lineitem_b", "o_orderkey", 8
     )
 
-    a = read_table(spark, "orders_b")
-    b = read_table(spark, "lineitem_b")
+    a = spark.table("orders_b")
+    b = spark.table("lineitem_b")
     joined = a.join(b, "o_orderkey").groupBy("o_orderkey").agg(
         F.sum("l_quantity").alias("qty")
     )
@@ -54,12 +54,9 @@ def test_q18_bucketed_agg_has_no_lineitem_shuffle(spark, sf_dir):
     shuffle the small sides)."""
     import pyspark.sql.functions as F
 
-    from diagnosisextraction_ml_spark.plans.queries import (
-        _bucketed_lineitem,
-        queries,
-    )
+    from diagnosisextraction_ml_spark.plans.queries import _layout, queries
 
-    li = _bucketed_lineitem(spark, sf_dir, n_buckets=8)
+    li = _layout(spark, sf_dir, "lineitem", "l_orderkey", n_buckets=8)
     agg = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("__sq"))
@@ -165,15 +162,40 @@ def test_q20_bucketed_no_fact_exchange(spark, sf_dir):
 
 
 def _bucketed_loc(sf_dir: str, source: str, key: str, n_buckets: int) -> str:
+    import os
+
+    from diagnosisextraction_ml_spark.plans.queries import (
+        _bucketed_base_dir,
+        _layout_name,
+    )
+
+    name = _layout_name(sf_dir, source, key, n_buckets=n_buckets)
+    return os.path.join(_bucketed_base_dir(), name)
+
+
+def test_layout_names_keep_published_dirs(sf_dir):
+    """Layout directories already published on disk stay valid: each
+    kind's name is the md5 of the same spec string as before the three
+    layout builders merged into one."""
     import hashlib
     import os
 
-    from diagnosisextraction_ml_spark.plans.queries import _bucketed_base_dir
+    from diagnosisextraction_ml_spark.plans.queries import _layout_name
 
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{key}|{n_buckets}".encode()
-    ).hexdigest()[:10]
-    return os.path.join(_bucketed_base_dir(), f"{source}_b_{tag}")
+    rp = os.path.realpath(sf_dir)
+
+    def tag(spec: str) -> str:
+        return hashlib.md5(spec.encode()).hexdigest()[:10]
+
+    assert _layout_name(sf_dir, "orders", "o_orderkey", n_buckets=4) == (
+        f"orders_b_{tag(f'{rp}|o_orderkey|4')}"
+    )
+    assert _layout_name(sf_dir, "events", part_col="event_day") == (
+        f"events_p_{tag(f'{rp}|event_day')}"
+    )
+    assert _layout_name(sf_dir, "lineitem", "l_orderkey", "l_shipmonth") == (
+        f"lineitem_bp_{tag(f'{rp}|l_orderkey|l_shipmonth|32')}"
+    )
 
 
 def test_bucketed_fact_survives_data_removal(spark, sf_dir):
@@ -188,13 +210,13 @@ def test_bucketed_fact_survives_data_removal(spark, sf_dir):
 
     from diagnosisextraction_ml_spark.plans import queries as q
 
-    df = q._bucketed_fact(spark, sf_dir, "orders", "o_custkey", 4)
+    df = q._layout(spark, sf_dir, "orders", "o_custkey", n_buckets=4)
     expect = df.count()
     loc = _bucketed_loc(sf_dir, "orders", "o_custkey", 4)
     assert os.path.isdir(loc)
     shutil.rmtree(loc)  # simulate the tmp cleaner
     other = spark.newSession()  # shares the in-memory catalog
-    df2 = q._bucketed_fact(other, sf_dir, "orders", "o_custkey", 4)
+    df2 = q._layout(other, sf_dir, "orders", "o_custkey", n_buckets=4)
     assert df2.count() == expect  # rebuilt, not a dangling scan
     assert os.path.isdir(loc)
     # and it is really bucket-local again
@@ -204,33 +226,47 @@ def test_bucketed_fact_survives_data_removal(spark, sf_dir):
     shutil.rmtree(loc, ignore_errors=True)
 
 
-def test_bucketed_fact_rename_race_loser_reads_winner(spark, sf_dir):
+def test_bucketed_fact_rename_race_loser_reads_winner(spark, sf_dir, monkeypatch):
     """Two builders racing on the same layout: the publish is staging +
     atomic rename, so the loser's rename fails, its staging is
     discarded, and it reads the winner's (identical) data — correct
     results on both sides, no mid-rmtree window. Simulated by
-    pre-publishing the winner's directory, then running the losing
-    publish directly."""
+    pre-publishing the winner's directory, then building again from a
+    session whose directory check ran before the winner landed."""
     import os
     import shutil
 
     from diagnosisextraction_ml_spark.plans import queries as q
 
     # winner publishes
-    df = q._bucketed_fact(spark, sf_dir, "orders", "o_orderkey", 4)
+    df = q._layout(spark, sf_dir, "orders", "o_orderkey", n_buckets=4)
     expect = sorted(map(tuple, df.limit(5).collect()))
     loc = _bucketed_loc(sf_dir, "orders", "o_orderkey", 4)
     assert os.path.isdir(loc)
     mtime_before = os.path.getmtime(loc)
-    # loser stages and tries to publish into the existing location:
-    # must swallow the rename failure and leave the winner's data alone
-    q._publish_bucketed_layout(spark, sf_dir, "orders", "o_orderkey", 4, loc)
+    # loser: its first look at the directory predates the winner's
+    # rename, so it stages and tries to publish into the existing
+    # location; it must swallow the rename failure, leave the winner's
+    # data alone, and read it
+    isdir, stale = os.path.isdir, [loc]
+
+    def racing_isdir(path):
+        if path == loc and stale:
+            stale.pop()
+            return False
+        return isdir(path)
+
+    monkeypatch.setattr(os.path, "isdir", racing_isdir)
+    df2 = q._layout(spark.newSession(), sf_dir, "orders", "o_orderkey", n_buckets=4)
+    monkeypatch.undo()
+    assert not stale  # the loser really took the publish path
     assert os.path.getmtime(loc) == mtime_before  # winner's publish intact
     assert not any(
         p.endswith(f".stage.{os.getpid()}")
         for p in os.listdir(os.path.dirname(loc))
     )  # loser's staging cleaned up
-    df2 = q._bucketed_fact(spark, sf_dir, "orders", "o_orderkey", 4)
+    plan = df2._jdf.queryExecution().executedPlan().toString()
+    assert os.path.basename(loc) in plan  # the layout, not the fallback
     assert sorted(map(tuple, df2.limit(5).collect())) == expect
     spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(loc)}")
     shutil.rmtree(loc, ignore_errors=True)
@@ -314,7 +350,7 @@ def test_bucketed_fact_two_process_concurrent_build(spark, sf_dir, tmp_path):
         "from diagnosisextraction_ml_spark.plans import queries as q\n"
         "spark = get_spark('race-peer', master='local[2]', shuffle_partitions=4)\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
-        f"df = q._bucketed_fact(spark, {sf_dir!r}, 'orders', 'o_orderkey', 4)\n"
+        f"df = q._layout(spark, {sf_dir!r}, 'orders', 'o_orderkey', n_buckets=4)\n"
         "print('PEER_COUNT', df.count())\n"
     )
     peer = subprocess.Popen(
@@ -324,7 +360,7 @@ def test_bucketed_fact_two_process_concurrent_build(spark, sf_dir, tmp_path):
         text=True,
     )
     # build in this session while the peer JVM boots and builds
-    df = q._bucketed_fact(spark, sf_dir, "orders", "o_orderkey", 4)
+    df = q._layout(spark, sf_dir, "orders", "o_orderkey", n_buckets=4)
     mine = df.count()
     out, _ = peer.communicate(timeout=300)
     assert peer.returncode == 0, out
@@ -392,12 +428,12 @@ def test_bucket_pruning_point_lookup(spark, sf_dir):
     a registered query, same policy as aggregate pushdown)."""
     import pyspark.sql.functions as F
 
-    from diagnosisextraction_ml_spark.plans.queries import _bucketed_lineitem
+    from diagnosisextraction_ml_spark.plans.queries import _layout
 
     prev = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try:
-        li = _bucketed_lineitem(spark, sf_dir)
+        li = _layout(spark, sf_dir, "lineitem", "l_orderkey")
         df = li.filter(F.col("l_orderkey") == 42)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "SelectedBucketsCount: 1 out of 32" in plan

@@ -1,4 +1,4 @@
-"""Hive-partitioned layout (sources/partitioned.py + _partitioned_fact):
+"""Hive-partitioned layout (sources/partitioned.py + queries._layout):
 the coarse partition predicate must PRUNE at listing time (fewer
 directories read), the exact predicates must stay pushed, and results
 must be identical to the plain scan — including when the layout
@@ -16,10 +16,7 @@ def _scan_lines(df, needle: str) -> list[str]:
 
 
 def test_q6_pruned_partition_filters_and_parity(spark, sf_dir):
-    from diagnosisextraction_ml_spark.plans.queries import (
-        _partitioned_fact,
-        queries,
-    )
+    from diagnosisextraction_ml_spark.plans.queries import _layout, queries
 
     qs = queries()
     df = qs["rel_q6_revenue_pruned"](spark, sf_dir)
@@ -31,7 +28,7 @@ def test_q6_pruned_partition_filters_and_parity(spark, sf_dir):
     assert "GreaterThanOrEqual(l_shipda" in line or "l_shipdate" in line
     # file-level pruning is real: the year reads strictly fewer
     # directories than the table has, and exactly the matching months
-    li = _partitioned_fact(spark, sf_dir, "lineitem", "l_shipmonth")
+    li = _layout(spark, sf_dir, "lineitem", part_col="l_shipmonth")
     total = li.select("l_shipmonth").distinct().count()
     pruned_files = (
         li.filter(
@@ -50,16 +47,13 @@ def test_q6_pruned_partition_filters_and_parity(spark, sf_dir):
 
 
 def test_events_week_pruned_reads_seven_days(spark, sf_dir):
-    from diagnosisextraction_ml_spark.plans.queries import (
-        _partitioned_fact,
-        queries,
-    )
+    from diagnosisextraction_ml_spark.plans.queries import _layout, queries
 
     qs = queries()
     df = qs["events_week_stats_pruned"](spark, sf_dir)
     scans = _scan_lines(df, "PartitionFilters")
     assert scans and "event_day" in scans[0].split("PartitionFilters:")[1].split("]")[0]
-    ev = _partitioned_fact(spark, sf_dir, "events", "event_day")
+    ev = _layout(spark, sf_dir, "events", part_col="event_day")
     total = ev.select(F.input_file_name()).distinct().count()
     pruned = (
         ev.filter(F.col("event_day").between("2024-01-08", "2024-01-14"))
@@ -114,21 +108,17 @@ def test_partitioned_layout_publish_is_atomic(spark, sf_dir):
 
     import diagnosisextraction_ml_spark.plans.queries as q
 
-    ev = q._partitioned_fact(spark, sf_dir, "events", "event_day")
+    ev = q._layout(spark, sf_dir, "events", part_col="event_day")
     n = ev.count()
     # simulate a losing racer: stage again while the published dir exists
-    import hashlib
-
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|event_day".encode()
-    ).hexdigest()[:10]
-    loc = os.path.join(q._bucketed_base_dir(), f"events_p_{tag}")
+    name = q._layout_name(sf_dir, "events", part_col="event_day")
+    loc = os.path.join(q._bucketed_base_dir(), name)
     assert os.path.isdir(loc)
-    again = q._partitioned_fact(spark, sf_dir, "events", "event_day")
+    again = q._layout(spark, sf_dir, "events", part_col="event_day")
     assert again.count() == n
     # no staging debris left behind
     parent = os.path.dirname(loc)
-    assert not [d for d in os.listdir(parent) if d.startswith(f"events_p_{tag}.stage")]
+    assert not [d for d in os.listdir(parent) if d.startswith(f"{name}.stage")]
 
 
 def test_dpp_months_dynamic_pruning_and_parity(spark, sf_dir):
@@ -168,16 +158,13 @@ def test_dpp_months_dynamic_pruning_and_parity(spark, sf_dir):
 def test_docs_lang_pruned_reads_one_language(spark, sf_dir):
     """docs_lang_pruned_stats: categorical pruning — the lang='en'
     predicate lists one of the five language directories."""
-    from diagnosisextraction_ml_spark.plans.queries import (
-        _partitioned_fact,
-        queries,
-    )
+    from diagnosisextraction_ml_spark.plans.queries import _layout, queries
 
     qs = queries()
     df = qs["docs_lang_pruned_stats"](spark, sf_dir)
     scans = _scan_lines(df, "PartitionFilters")
     assert scans and "lang" in scans[0].split("PartitionFilters:")[1].split("]")[0]
-    docs = _partitioned_fact(spark, sf_dir, "documents", "lang")
+    docs = _layout(spark, sf_dir, "documents", part_col="lang")
     langs = docs.select("lang").distinct().count()
     pruned = (
         docs.filter(F.col("lang") == "en")
@@ -251,7 +238,6 @@ def test_partitioned_fact_two_process_concurrent_build(spark, sf_dir, tmp_path):
     partitioned events layout concurrently; per-PID staging + one
     atomic rename means both read correct complete data and no staging
     debris survives."""
-    import hashlib
     import os
     import shutil
     import subprocess
@@ -259,10 +245,8 @@ def test_partitioned_fact_two_process_concurrent_build(spark, sf_dir, tmp_path):
 
     import diagnosisextraction_ml_spark.plans.queries as q
 
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|event_day".encode()
-    ).hexdigest()[:10]
-    loc = os.path.join(q._bucketed_base_dir(), f"events_p_{tag}")
+    name = q._layout_name(sf_dir, "events", part_col="event_day")
+    loc = os.path.join(q._bucketed_base_dir(), name)
     shutil.rmtree(loc, ignore_errors=True)  # force both sides to build
 
     script = tmp_path / "build_part_layout.py"
@@ -273,7 +257,7 @@ def test_partitioned_fact_two_process_concurrent_build(spark, sf_dir, tmp_path):
         "from diagnosisextraction_ml_spark.plans import queries as q\n"
         "spark = get_spark('race-peer-p', master='local[2]', shuffle_partitions=4)\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
-        f"df = q._partitioned_fact(spark, {sf_dir!r}, 'events', 'event_day')\n"
+        f"df = q._layout(spark, {sf_dir!r}, 'events', part_col='event_day')\n"
         "print('PEER_COUNT', df.count())\n"
     )
     peer = subprocess.Popen(
@@ -282,7 +266,7 @@ def test_partitioned_fact_two_process_concurrent_build(spark, sf_dir, tmp_path):
         stderr=subprocess.DEVNULL,
         text=True,
     )
-    df = q._partitioned_fact(spark, sf_dir, "events", "event_day")
+    df = q._layout(spark, sf_dir, "events", part_col="event_day")
     mine = df.count()
     out, _ = peer.communicate(timeout=300)
     assert peer.returncode == 0, out
@@ -293,7 +277,7 @@ def test_partitioned_fact_two_process_concurrent_build(spark, sf_dir, tmp_path):
     assert mine == expect and peer_count == expect
     assert os.path.isdir(loc)
     assert not any(
-        p.startswith(f"events_p_{tag}.stage")
+        p.startswith(f"{name}.stage")
         for p in os.listdir(os.path.dirname(loc))
     )
 
@@ -335,25 +319,15 @@ def test_combined_layout_foreign_session_reregisters(spark, sf_dir):
     catalog entry is explicitly dropped first — otherwise the
     tableExists early-return is taken and the DDL+MSCK path is never
     exercised (the two-process tests cover true catalog isolation)."""
-    import hashlib
-    import os
-
     import diagnosisextraction_ml_spark.plans.queries as q
 
-    base = q._bucketed_partitioned_fact(
-        spark, sf_dir, "lineitem", "l_orderkey", "l_shipmonth"
-    )
+    base = q._layout(spark, sf_dir, "lineitem", "l_orderkey", "l_shipmonth")
     n = base.count()
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|l_orderkey|l_shipmonth|32".encode()
-    ).hexdigest()[:10]
-    table = f"lineitem_bp_{tag}"
+    table = q._layout_name(sf_dir, "lineitem", "l_orderkey", "l_shipmonth")
     fresh = spark.newSession()
     fresh.sql(f"DROP TABLE IF EXISTS {table}")  # external: data stays
     assert not fresh.catalog.tableExists(table)
-    again = q._bucketed_partitioned_fact(
-        fresh, sf_dir, "lineitem", "l_orderkey", "l_shipmonth"
-    )
+    again = q._layout(fresh, sf_dir, "lineitem", "l_orderkey", "l_shipmonth")
     assert fresh.catalog.tableExists(table)  # DDL+MSCK path ran
     assert again.count() == n
 
@@ -372,13 +346,13 @@ def test_layout_and_fallback_schemas_identical(spark, sf_dir):
         ("events", "event_day"),
         ("documents", "lang"),
     ]:
-        layout = q._partitioned_fact(spark, sf_dir, source, part_col)
+        layout = q._layout(spark, sf_dir, source, part_col=part_col)
         fb = q._t(spark, sf_dir, source).withColumn(
             part_col, q._PARTITION_EXPRS[(source, part_col)]()
         )
         assert layout.schema == fb.schema, (source, part_col)
     # pruning must survive the pinned-schema read + reorder Project
-    ev = q._partitioned_fact(spark, sf_dir, "events", "event_day")
+    ev = q._layout(spark, sf_dir, "events", part_col="event_day")
     n = (
         ev.filter(F.col("event_day") == "2024-01-08")
         .select(F.input_file_name())

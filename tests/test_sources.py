@@ -59,6 +59,31 @@ def test_load_tables(spark, sf_dir):
     assert dict(ev.dtypes)["ts"] == "timestamp"
 
 
+def test_load_table_binds_to_child_session(spark, sf_dir):
+    """The reader memo lives on the session: a ``newSession()`` child
+    gets a DataFrame bound to itself, never its parent's memoized one
+    (child-session isolation, as observe_qc relies on)."""
+    parent = load_table(spark, sf_dir, "region")
+    assert load_table(spark, sf_dir, "region") is parent  # memo hit
+    child = spark.newSession()
+    df = load_table(child, sf_dir, "region")
+    assert df.sparkSession is child
+    assert parent.sparkSession is spark
+
+
+def test_load_table_memo_replaces_stale_entry(spark, tmp_path):
+    """Rewriting a table's files changes its freshness token: the next
+    load re-lists the new files and REPLACES the memo entry (one entry
+    per path) instead of adding a second one."""
+    sess = spark.newSession()
+    sf = str(tmp_path)
+    sess.range(3).write.parquet(f"{sf}/region.parquet")
+    assert load_table(sess, sf, "region").count() == 3
+    sess.range(7).write.mode("overwrite").parquet(f"{sf}/region.parquet")
+    assert load_table(sess, sf, "region").count() == 7
+    assert len(vars(sess)["_table_memo"]) == 1
+
+
 # Canonical post-load dtype snapshot for every TESTDATA table. The
 # driver regenerates the parquet between rounds and has already drifted
 # once (events.ts TIMESTAMP(NANOS) → TIMESTAMP_NTZ, which silently broke

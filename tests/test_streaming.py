@@ -520,7 +520,7 @@ def test_stream_sink_day_partitioned_layout(spark, sf_dir, tmp_path):
     writes at 100 TB: writeStream.partitionBy(event_day) lands one
     directory per day, and a later batch reader with a day predicate
     prunes at listing time (PartitionFilters) — the same contract
-    tests/test_partitioned.py pins for _partitioned_fact."""
+    tests/test_partitioned.py pins for the partitioned _layout."""
     path, schema = _events_dir(spark, sf_dir, tmp_path)
     stream = read_events_stream(spark, path, schema, max_files_per_trigger=2)
     out = str(tmp_path / "events_day_sink")
