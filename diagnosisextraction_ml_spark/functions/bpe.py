@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
+
 EOW = "</w>"
 
 
@@ -208,9 +210,7 @@ def corpus_word_counts(
     TakeOrderedAndProject, shipping every partition's top-K rows to a
     single merge point, which is exactly the wrong shape at 100 TB.
     """
-    toks = F.explode(
-        F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != "")
-    ).alias("word")
+    toks = F.explode(tokenize_expr(F.lower(F.col(text_col)))).alias("word")
     wc = df.select(toks).groupBy("word").agg(F.count("*").alias("n"))
     if min_count > 1:
         wc = wc.filter(F.col("n") >= min_count)
@@ -331,9 +331,7 @@ def bpe_token_stats(
     """
     tok = bpe_tokenize_udf(merges)
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    ws_n = F.size(
-        F.filter(F.split(F.trim(F.lower(txt)), r"\s+"), lambda t: t != "")
-    ).cast("long")
+    ws_n = F.size(tokenize_expr(F.lower(txt))).cast("long")
     out = df.select(
         F.col(id_col),
         F.size(tok(txt)).cast("long").alias("n_bpe_tokens"),

@@ -78,16 +78,25 @@ def fold_accents(col: Column | str) -> Column:
     return F.translate(c, _ACCENT_SRC, _ACCENT_DST)
 
 
-def tokenize_expr(col: Column | str, pattern: str = r"\s+") -> Column:
+def tokenize_expr(col: Column | str) -> Column:
     """T7 — whitespace tokenization → array<string>.
 
     Ref: ``sentence.split()`` (src/NLP_functions.py:69,104,547,581).
     Empty tokens from leading/trailing whitespace are dropped, matching
-    Python's argument-less split.
+    Python's argument-less split. The one word tokenizer of the package:
+    callers that want case-folded words pass ``F.lower(col)``.
     """
     c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.trim(c), pattern)
-    return F.filter(toks, lambda t: t != "")
+    return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
+
+
+def tokenize_sql(expr: str) -> str:
+    r"""DuckDB-SQL twin of :func:`tokenize_expr`.
+
+    RE2's ``\s`` lacks the vertical tab that Java's ``\s`` (and Python's
+    ``str.split``) split on, so the class adds ``\v`` explicitly.
+    """
+    return f"list_filter(string_split_regex(trim({expr}), '[\\s\\v]+'), x -> x != '')"
 
 
 def remove_stopwords_expr(tokens: Column, stopwords: Sequence[str]) -> Column:

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.stopwords import ENGLISH_STOPWORDS
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 # Gopher Table A1 thresholds
 MIN_WORDS = 50
@@ -42,10 +43,6 @@ MAX_ELLIPSIS_LINE_FRAC = 0.3
 MIN_ALPHA_WORD_FRAC = 0.8
 MIN_STOPWORD_HITS = 2
 _GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
-
-
-def _toks(c: Column) -> Column:
-    return F.filter(F.split(F.trim(F.lower(c)), r"\s+"), lambda t: t != "")
 
 
 def _lines(c: Column) -> Column:
@@ -65,7 +62,7 @@ def gopher_quality_flags(
     base = df.select(
         F.col(id_col),
         c.alias("__text"),
-        _toks(c).alias("__toks"),
+        tokenize_expr(F.lower(c)).alias("__toks"),
         _lines(c).alias("__lines"),
     )
     t, toks, lines = F.col("__text"), F.col("__toks"), F.col("__lines")
@@ -133,7 +130,7 @@ def c4_line_keep(line: Column) -> Column:
     blocked = F.lit(False)
     for b in _C4_BLOCKLIST:
         blocked = blocked | low.contains(b)
-    n_words = F.size(F.filter(F.split(l, r"\s+"), lambda t: t != ""))
+    n_words = F.size(tokenize_expr(line))
     return ends_ok & ~blocked & (n_words >= C4_MIN_LINE_WORDS)
 
 

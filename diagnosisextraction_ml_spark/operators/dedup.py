@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import KNUTH, M31, md5_hash64
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 # Shingling runs at the input's parallelism: fan_out spreads a narrow
 # (1-2 partition) scan so tokenize+zip+concat is not pinned to 1-2 cores.
@@ -129,27 +130,36 @@ def dedup_first_seen_within_horizon(
 # shingling + MinHash
 # --------------------------------------------------------------------------
 
-def _gram_col(text_col: str, n: int):
-    """Column of all word n-gram shingles of ``text_col`` (with dupes,
-    possibly containing "" for empty docs — callers dedup/drop).
+def _word_ngrams(toks: Column, n: int, short: Column) -> Column:
+    """Word n-grams of a token array, in start-position order; ``short``
+    stands in for arrays of fewer than n tokens.
 
     Built as ``arrays_zip`` of n shifted slices + one concat per
     position — 2 array copies total instead of one ``slice`` copy per
     position (the per-position form measured ~2× slower on the
-    documents table). Docs shorter than n tokens contribute their
-    whole text as the single shingle (same as the clamped-slice
-    semantics the DuckDB oracle twin reproduces).
+    documents table).
     """
-    toks = F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != "")
-    if n == 1:
-        return toks
     sz = F.size(toks)
     zipped = F.arrays_zip(*[F.slice(toks, i + 1, sz) for i in range(n)])
     full = F.transform(
         F.slice(zipped, 1, sz - n + 1),
         lambda s: F.concat_ws(" ", *[s.getField(str(i)) for i in range(n)]),
     )
-    return F.when(sz >= n, full).otherwise(F.array(F.array_join(toks, " ")))
+    return F.when(sz >= n, full).otherwise(short)
+
+
+def _gram_col(text_col: str, n: int):
+    """Column of all word n-gram shingles of ``text_col`` (with dupes,
+    possibly containing "" for empty docs — callers dedup/drop).
+
+    Docs shorter than n tokens contribute their whole text as the
+    single shingle (same as the clamped-slice semantics the DuckDB
+    oracle twin reproduces).
+    """
+    toks = tokenize_expr(F.lower(F.col(text_col)))
+    if n == 1:
+        return toks
+    return _word_ngrams(toks, n, F.array(F.array_join(toks, " ")))
 
 
 def shingle_arrays(
@@ -583,7 +593,7 @@ def simhash_signatures(
     sums in a single aggregation — no joins, no windows; the canonical
     shuffle-light near-dup sketch.
     """
-    toks = F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != "")
+    toks = tokenize_expr(F.lower(F.col(text_col)))
     tok = df.select(F.col(id_col), F.explode(toks).alias("tok"))
     h = md5_hash64("tok")
     votes = [
@@ -1287,6 +1297,11 @@ def dedup_incremental(
     output for unique ``id_col`` (the operator's contract — survivors
     are min-id representatives appendable to corpus + index).
 
+    Rows with a null ``id_col`` are dropped before the fingerprint
+    pass: they cannot be appended as min-id representatives, and
+    struct-min sorts null first, so one would otherwise shadow a
+    real-id duplicate of the same text.
+
     Struct-min orders every column, so a map-typed column (at any
     nesting depth) is rejected with ``ValueError``. Column names may
     contain dots.
@@ -1306,7 +1321,7 @@ def dedup_incremental(
 
     normalized = F.regexp_replace(F.trim(col(text_col)), r"\s+", " ")
     other_cols = [c for c in new_df.columns if c != id_col]
-    fp = new_df.select(
+    fp = new_df.filter(col(id_col).isNotNull()).select(
         F.md5(normalized).alias("fingerprint"),
         F.struct(col(id_col), *[col(c) for c in other_cols]).alias("__row"),
     )
@@ -1393,20 +1408,11 @@ def _dup_gram_positions(
     # thousands of splits (this is the one place the family shuffles
     # text, and only in the small-input regime).
     df = fan_out(df)
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
-    )
+    toks = tokenize_expr(F.lower(F.col(text_col)))
     base = df.select(F.col(id_col), toks.alias("__toks"))
 
-    sz = F.size(F.col("__toks"))
-    zipped = F.arrays_zip(*[F.slice(F.col("__toks"), i + 1, sz) for i in range(n)])
-    grams = F.when(
-        sz >= n,
-        F.transform(
-            F.slice(zipped, 1, sz - n + 1),
-            lambda s: F.concat_ws(" ", *[s.getField(str(i)) for i in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    # documents shorter than n tokens yield no grams
+    grams = _word_ngrams(F.col("__toks"), n, F.array().cast("array<string>"))
     pos_grams = base.select(
         F.col(id_col), F.posexplode(grams).alias("pos", "gram")
     ).select(F.col(id_col), "pos", md5_hash64(F.col("gram")).alias("gram_hash"))

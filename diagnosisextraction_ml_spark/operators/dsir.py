@@ -49,18 +49,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Column
 
 from diagnosisextraction_ml_spark.functions.hashing import md5_hash64
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 DEFAULT_BUCKETS = 4096
 _TWO60 = float(1 << 60)  # md5_hash64 range is [0, 2^60)
-
-
-def _tokens(text_col: str) -> Column:
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
-    )
 
 
 def hashed_gram_buckets(
@@ -78,13 +72,14 @@ def hashed_gram_buckets(
     the successor exists, and ``array_compact`` drops the missing one.
     """
     cols = list(extra or [])
+    toks = tokenize_expr(F.lower(F.col(text_col)))
     n = F.size("toks")
     pairs = F.arrays_zip(
         F.col("toks").alias("w1"),
         F.slice("toks", 2, F.greatest(n - 1, F.lit(0))).alias("w2"),
     )
     exploded = (
-        df.select(F.col(id_col), *[F.col(c) for c in cols], _tokens(text_col).alias("toks"))
+        df.select(F.col(id_col), *[F.col(c) for c in cols], toks.alias("toks"))
         .filter(F.size("toks") >= 1)
         .select(F.col(id_col), *[F.col(c) for c in cols], F.explode(pairs).alias("p"))
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import md5_hash64
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 DEFAULT_BUCKETS = 4096
 
@@ -50,9 +51,7 @@ def _bigram_buckets(
     without a join-back scan; they add no shuffle volume (the scorer's
     partial aggregation combines per document before the exchange).
     """
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
-    )
+    toks = tokenize_expr(F.lower(F.col(text_col)))
     carry = [F.col(c) for c in carry_cols]
     with_toks = df.select(F.col(id_col), *carry, toks.alias("toks")).filter(
         F.size("toks") >= 2
@@ -165,9 +164,7 @@ def _trigram_buckets(
 ) -> DataFrame:
     """(id, *carry, b1, b2, b3) — one row per adjacent token triple
     (hashed). ``carry_cols``: see :func:`_bigram_buckets`."""
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
-    )
+    toks = tokenize_expr(F.lower(F.col(text_col)))
     carry = [F.col(c) for c in carry_cols]
     with_toks = df.select(F.col(id_col), *carry, toks.alias("toks")).filter(
         F.size("toks") >= 3
@@ -204,9 +201,7 @@ def fit_trigram_counts(
     ``min_count`` prunes only the trigram table (the big one at web
     scale); the lower orders are the backoff mass and stay complete.
     """
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
-    )
+    toks = tokenize_expr(F.lower(F.col(text_col)))
     uni = (
         df.select(F.explode(toks).alias("w"))
         .select((md5_hash64(F.col("w")) % F.lit(n_buckets)).alias("b1"))

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import md5_hash64
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 DEFAULT_BUCKETS = 4096
 
@@ -57,9 +58,7 @@ def _token_buckets(
     the wider partial-aggregate shuffle canceling the tokenize
     parallelism (4.14s narrow vs 4.07s fanned — a wash, not worth the
     extra Exchange in every plan)."""
-    toks = F.explode(
-        F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != "")
-    ).alias("token")
+    toks = F.explode(tokenize_expr(F.lower(F.col(text_col)))).alias("token")
     base = df.select(F.col(id_col), *[F.col(c) for c in (extra or [])], toks)
     return base.select(
         F.col(id_col),
@@ -188,9 +187,7 @@ def score_token_logodds_rowwise(
 
     # token count stays a native JVM expression — only the weight-map
     # lookup needs Python
-    n_tok = F.size(
-        F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != "")
-    ).cast("long")
+    n_tok = F.size(tokenize_expr(F.lower(F.col(text_col)))).cast("long")
     out = df.withColumn("n_tok", n_tok).withColumn("w_sum", _w_sum(F.col(text_col)))
     return out.select(
         F.col(id_col),

@@ -46,7 +46,7 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from diagnosisextraction_ml_spark.operators.textstats import ws_tokens
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -61,7 +61,7 @@ def build_bm25_index(
     self-contained; dfreq: (term, df); stats: 1 row (n_docs, total_dl).
     """
     tok = docs.select(
-        F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("term")
+        F.col(id_col), F.explode(tokenize_expr(F.lower(F.col(text_col)))).alias("term")
     )
     postings = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = postings.groupBy(id_col).agg(F.sum("tf").alias("dl"))
@@ -130,7 +130,7 @@ def _scan_term_tf(
     from diagnosisextraction_ml_spark.functions.partitioning import fan_out
 
     docs = fan_out(docs)
-    toks = ws_tokens(F.col(text_col))
+    toks = tokenize_expr(F.lower(F.col(text_col)))
 
     def _eq(term: str):
         # single-parameter lambda: a two-parameter one would be taken

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import KNUTH, M31, md5_hash64
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -996,9 +997,7 @@ def srp_embed_text(
 
     Output: (id, embedding array<double>) — docs with no tokens drop.
     """
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
-    )
+    toks = tokenize_expr(F.lower(F.col(text_col)))
     tc = (
         docs.select(F.col(id_col), F.explode(toks).alias("w"))
         .groupBy(id_col, "w")

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import md5_hash64
-from diagnosisextraction_ml_spark.operators.textstats import ws_tokens
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 DEPTH = 4
 WIDTH = 8192
@@ -59,7 +59,7 @@ def cms_build(
 
     Output: (cms_row int, cms_col long, cnt long).
     """
-    tok = F.explode(ws_tokens(F.col(text_col))).alias("token")
+    tok = F.explode(tokenize_expr(F.lower(F.col(text_col)))).alias("token")
     cells = F.explode(
         F.array(
             *[

@@ -19,6 +19,7 @@ from diagnosisextraction_ml_spark.functions.stopwords import (
     DUTCH_STOPWORDS,
     ENGLISH_STOPWORDS,
 )
+from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 # A BPE-ish word-piece pattern: runs of letters, runs of digits, or a
 # single non-space symbol — the shape GPT-style pre-tokenizers use.
@@ -42,21 +43,9 @@ def _txt(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def ws_tokens(col: Column | str) -> Column:
-    """Lowercased whitespace tokens (argless-split semantics: empty → []).
-
-    The shared tokenization every per-document stat derives from —
-    :func:`document_stats` projects it once and feeds all consumers, so
-    the hot map stage splits each text a single time instead of once
-    per statistic.
-    """
-    c = F.lower(_txt(col))
-    return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
-
-
 def token_count_ws(col: Column | str) -> Column:
     """Whitespace token count (argless-split semantics: empty → 0)."""
-    return F.size(ws_tokens(col))
+    return F.size(tokenize_expr(F.lower(col)))
 
 
 def token_count_bpe_ish(col: Column | str) -> Column:
@@ -74,7 +63,7 @@ def stopword_ratio_of(toks: Column, stopwords: Sequence[str]) -> Column:
 
 def stopword_ratio(col: Column | str, stopwords: Sequence[str]) -> Column:
     """Fraction of lowercase whitespace tokens that are stopwords."""
-    return stopword_ratio_of(ws_tokens(col), stopwords)
+    return stopword_ratio_of(tokenize_expr(F.lower(col)), stopwords)
 
 
 def punct_ratio(col: Column | str) -> Column:
@@ -137,8 +126,11 @@ def fingerprint_expr(col: Column | str) -> Column:
 def document_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """All per-document text stats in one map stage, tokenizing once.
 
-    Structured as three stacked projections sharing the token array and
-    the raw ratios. Catalyst's CollapseProject keeps a non-cheap alias
+    The lowercased token array is the shared input every per-document
+    stat derives from, so it is projected once and feeds all consumers:
+    the hot map stage splits each text a single time instead of once
+    per statistic. Structured as three stacked projections sharing the
+    token array and the raw ratios. Catalyst's CollapseProject keeps a non-cheap alias
     that is referenced more than once (``__toks`` feeds four stats,
     ``__sw``/``__punct`` feed two each) instead of inlining it, so the
     physical plan evaluates each shared expression a single time while
@@ -153,7 +145,7 @@ def document_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 
     c = F.col(text_col)
     with_toks = fan_out(df).select(
-        F.col(id_col), c.alias("__text"), ws_tokens(c).alias("__toks")
+        F.col(id_col), c.alias("__text"), tokenize_expr(F.lower(c)).alias("__toks")
     )
     t, toks = F.col("__text"), F.col("__toks")
     mid = with_toks.select(
@@ -204,7 +196,7 @@ def repetition_stats(
     document prefix, not 100 MB outliers — the cap also bounds the
     worst-case row cost at scale).
     """
-    toks_all = ws_tokens(F.col(text_col))
+    toks_all = tokenize_expr(F.lower(F.col(text_col)))
     base = df.select(
         F.col(id_col), F.slice(toks_all, 1, max_tokens).alias("__toks")
     )
@@ -272,7 +264,7 @@ def top_k_words(
     # measured A/B (sf0.1, narrow 1.47s vs fanned 2.30s): the bigger
     # partial shuffle costs more than the tokenize parallelism buys.
     c = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    toks = F.explode(F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")).alias("word")
+    toks = F.explode(tokenize_expr(c)).alias("word")
     words = df.select(toks)
     if stopwords:
         words = words.filter(~F.col("word").isin(list(stopwords)))
@@ -303,7 +295,7 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     step = chunk_tokens - overlap
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = tokenize_expr(F.col(text_col))
     sz = F.size(toks)
     # window starts: 0, step, 2·step, … while start < max(sz, 1)
     n_chunks = F.greatest(F.ceil((sz - F.lit(overlap)) / F.lit(step)), F.lit(1)).cast("int")
@@ -446,7 +438,7 @@ def lexical_dispersion(
     (doc_id, term, position) — the plot's raw points, computed with
     posexplode, filtered to the requested terms before the shuffle.
     """
-    toks = F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != "")
+    toks = tokenize_expr(F.lower(F.col(text_col)))
     exploded = df.select(F.col(id_col), F.posexplode(toks).alias("position", "term"))
     return exploded.filter(F.col("term").isin(list(terms)))
 
@@ -537,9 +529,7 @@ def doc_commonness(
     join on (session default here); the df table is (token, count)
     only, never text. Division of two exact counts → exact ratio.
     """
-    toks = F.array_distinct(
-        F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != "")
-    )
+    toks = F.array_distinct(tokenize_expr(F.lower(F.col(text_col))))
     doc_tokens = df.select(F.col(id_col), F.explode(toks).alias("token"))
     token_df = doc_tokens.groupBy("token").agg(F.count("*").alias("token_docfreq"))
     return (
@@ -616,9 +606,7 @@ def vocab_coverage(
     """
     from diagnosisextraction_ml_spark.operators.evaluate import _bucketed_cumsum
 
-    toks = F.explode(
-        F.filter(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != "")
-    ).alias("word")
+    toks = F.explode(tokenize_expr(F.lower(F.col(text_col)))).alias("word")
     wc = df.select(toks).groupBy("word").agg(F.count("*").alias("c"))
     per_count = wc.groupBy("c").agg(F.count("*").alias("n_words")).select(
         F.col("c").alias("min_count"),
@@ -714,7 +702,7 @@ def corpus_kl_divergence(
     counts = (
         df.select(
             F.col(group_col).alias("g"),
-            F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("word"),
+            F.explode(tokenize_expr(F.lower(F.col(text_col)))).alias("word"),
         )
         .groupBy("g", "word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -804,7 +792,7 @@ def pmi_token_pairs(
     dt = (
         df.select(
             F.col(id_col).alias("doc"),
-            F.explode(F.array_distinct(ws_tokens(F.lower(F.col(text_col))))).alias(
+            F.explode(F.array_distinct(tokenize_expr(F.lower(F.col(text_col))))).alias(
                 "token"
             ),
         )
@@ -875,7 +863,7 @@ def token_entropy(
     Output: (id, n_tokens, n_distinct, entropy_micro).
     """
     tok = df.select(
-        F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("t")
+        F.col(id_col), F.explode(tokenize_expr(F.lower(F.col(text_col)))).alias("t")
     )
     per = tok.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("c"))
     clnc = F.round(

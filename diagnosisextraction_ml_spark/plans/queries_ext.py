@@ -40,6 +40,7 @@ from diagnosisextraction_ml_spark.functions.text import (
     remove_stopwords_expr,
     simple_cleaning,
     tokenize_expr,
+    tokenize_sql,
     word_match_expr,
 )
 from diagnosisextraction_ml_spark.operators import dedup, evaluate, joins, prep, profile, similarity, textstats
@@ -73,11 +74,6 @@ def _clean_sql(expr: str) -> str:
     expr = f"translate({expr}, {_sq(_ACCENT_SRC)}, {_sq(_ACCENT_DST)})"
     sticky = STICKY_CHARS_RE.replace("'", "''")
     return f"lower(regexp_replace({expr}, '{sticky}', ' ', 'g'))"
-
-
-def _toks_sql(expr: str) -> str:
-    r"""DuckDB twin of tokenize_expr: split on \s+, drop empties."""
-    return f"list_filter(string_split_regex(trim({expr}), '\\s+'), x -> x != '')"
 
 
 def _sql_list(words) -> str:
@@ -148,8 +144,8 @@ register(
     "text_token_stats",
     f"""
     SELECT doc_id,
-           CAST(len({_toks_sql('lower(text)')}) AS INT) AS n_tokens,
-           CAST(len(list_filter({_toks_sql('lower(text)')},
+           CAST(len({tokenize_sql('lower(text)')}) AS INT) AS n_tokens,
+           CAST(len(list_filter({tokenize_sql('lower(text)')},
                t -> NOT list_contains({_sql_list(ENGLISH_STOPWORDS)}, t))) AS INT) AS n_content_tokens
     FROM documents
     """,
@@ -176,7 +172,7 @@ register(
     "text_top_words",
     f"""
     WITH toks AS (
-      SELECT unnest({_toks_sql('lower(text)')}) AS word FROM documents)
+      SELECT unnest({tokenize_sql('lower(text)')}) AS word FROM documents)
     SELECT word, count(*) AS n FROM toks
     WHERE NOT list_contains({_sql_list(ENGLISH_STOPWORDS)}, word)
     GROUP BY word ORDER BY n DESC, word ASC LIMIT 50
@@ -193,7 +189,7 @@ _DISPERSION_TERMS = ("table", "row", "query")
 register(
     "text_lexical_dispersion",
     f"""
-    WITH t AS (SELECT doc_id, {_toks_sql('lower(text)')} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tokenize_sql('lower(text)')} AS toks FROM documents),
     pos AS (SELECT doc_id, unnest(range(0, len(toks))) AS position, unnest(toks) AS term FROM t)
     SELECT doc_id, CAST(position AS INT) AS position, term FROM pos
     WHERE list_contains({_sql_list(_DISPERSION_TERMS)}, term)
@@ -211,7 +207,7 @@ _STEP = _CHUNK - _OVERLAP
 register(
     "text_chunk_documents",
     f"""
-    WITH t AS (SELECT doc_id, {_toks_sql('text')} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tokenize_sql('text')} AS toks FROM documents),
     p AS (SELECT doc_id, toks, len(toks) AS sz,
                  CAST(greatest(ceil((len(toks) - {_OVERLAP}) / {_STEP}.0), 1) AS INT) AS n_chunks
           FROM t),
@@ -237,7 +233,7 @@ register(
 # ---------------------------------------------------------------------------
 
 def _sw_ratio_sql(c: str) -> str:
-    toks = _toks_sql(f"lower({c})")
+    toks = tokenize_sql(f"lower({c})")
     sw = _sql_list(ENGLISH_STOPWORDS)
     n_sw = f"len(list_filter({toks}, t -> list_contains({sw}, t)))"
     n_toks = f"len({toks})"
@@ -264,7 +260,7 @@ def _quality_sql(c: str) -> str:
 
 def _doc_stats_sql() -> str:
     c = "text"
-    toks = _toks_sql(f"lower({c})")
+    toks = tokenize_sql(f"lower({c})")
     n_toks = f"len({toks})"
     sw_ratio = _sw_ratio_sql(c)
     punct_ratio = _punct_ratio_sql(c)
@@ -335,7 +331,7 @@ def _repetition_sql(max_tokens: int = 200) -> str:
     """DuckDB twin of textstats.repetition_stats — same capped tokens,
     same O(g·d) count arithmetic, same order-free tie-break
     (lexicographic min among maximal-count bigrams)."""
-    toks = f"({_toks_sql('text')})[1:{max_tokens}]"
+    toks = f"({tokenize_sql('text')})[1:{max_tokens}]"
     return f"""
     WITH base AS (SELECT doc_id, {toks} AS t FROM documents),
     g AS (SELECT doc_id, t,
@@ -516,7 +512,7 @@ register(
     f"""
     WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
     sh AS (SELECT DISTINCT doc_id, shingle FROM (
-      SELECT doc_id, unnest({_toks_sql('lower(text)')}) AS shingle FROM docs)
+      SELECT doc_id, unnest({tokenize_sql('lower(text)')}) AS shingle FROM docs)
       WHERE shingle != ''),
     hx AS (SELECT doc_id, {md5_hash64_sql('shingle')} % {M31} AS x FROM sh),
     expanded AS (SELECT doc_id, x, i
@@ -540,7 +536,7 @@ _SH_BITS = 16
 
 
 def _simhash_sql() -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     x = md5_hash64_sql("tok")
     votes = ", ".join(
         f"sum(CASE WHEN (({x}) >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
@@ -568,7 +564,7 @@ register("dedup_simhash_sigs", _simhash_sql())(
 
 
 def _jaccard_sql() -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     grams = (
         f"list_distinct([array_to_string(t[i+1:i+3], ' ') "
         f"for i in range(0, greatest(len(t)-3, 0)+1)])"
@@ -608,7 +604,7 @@ def _lsh_band_pairs_sql(k: int, bands: int, max_bucket: int = 1000) -> str:
     cap. Grouping by (band, band_key) is the md5 bucket modulo
     collisions.
     """
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     grams = (
         "list_distinct([array_to_string(t[i+1:i+3], ' ') "
         "for i in range(0, greatest(len(t)-3, 0)+1)])"
@@ -732,7 +728,7 @@ register(
            CAST(count(*) - count(DISTINCT
                  md5(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS DOUBLE)
              / count(*) AS dup_rate,
-           CAST(sum(len({_toks_sql('text')})) AS BIGINT) AS total_tokens,
+           CAST(sum(len({tokenize_sql('text')})) AS BIGINT) AS total_tokens,
            CAST(sum(n_chars) AS DOUBLE) / count(*) AS mean_chars
     FROM documents
     GROUP BY GROUPING SETS ((source, lang), (source), ())
@@ -1743,7 +1739,7 @@ def _pipeline_llm_prep(spark, sf_dir):
 
 
 def _pipeline_llm_prep_sql() -> str:
-    toks = _toks_sql("text")
+    toks = tokenize_sql("text")
     fp = "md5(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
     return f"""
     WITH corpus AS ({_DUP_UNION_SQL}),
@@ -1762,7 +1758,7 @@ def _pipeline_llm_prep_sql() -> str:
           FROM p)
     SELECT doc_id, CAST(ch.chunk_idx AS INT) AS chunk_idx,
            CAST(ch.n_tokens AS INT) AS n_tokens,
-           CAST(len({_toks_sql('ch.chunk')}) AS INT) AS n_tokens_check
+           CAST(len({tokenize_sql('ch.chunk')}) AS INT) AS n_tokens_check
     FROM c WHERE ch.chunk != ''
     """
 
@@ -1782,7 +1778,7 @@ def _pack_token_stream_entry(seq_len: int = 256, shard_docs: int = 4096) -> None
     pack_sequences at queries_ext.py's textstats entry)."""
     from diagnosisextraction_ml_spark.operators.textstats import pack_token_stream
 
-    toks = _toks_sql("text")
+    toks = tokenize_sql("text")
     sql = f"""
     WITH t AS (
       SELECT doc_id, CAST(doc_id AS BIGINT) // {shard_docs} AS shard,
@@ -1893,7 +1889,7 @@ def _pipeline_llm_prep_mm_gated(spark, sf_dir):
 
 
 def _pipeline_llm_prep_mm_gated_sql() -> str:
-    toks = _toks_sql("text")
+    toks = tokenize_sql("text")
     fp = "md5(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
     return f"""
     WITH img_ok AS (
@@ -1925,7 +1921,7 @@ def _pipeline_llm_prep_mm_gated_sql() -> str:
           FROM p)
     SELECT doc_id, CAST(ch.chunk_idx AS INT) AS chunk_idx,
            CAST(ch.n_tokens AS INT) AS n_tokens,
-           CAST(len({_toks_sql('ch.chunk')}) AS INT) AS n_tokens_check
+           CAST(len({tokenize_sql('ch.chunk')}) AS INT) AS n_tokens_check
     FROM c WHERE ch.chunk != ''
     """
 
@@ -1953,7 +1949,7 @@ def _typo_sql() -> str:
     such token/vocab pair exists in this corpus (the row hash-matches),
     and any engine-side regression would still break the hash.
     """
-    toks = _toks_sql("text")
+    toks = tokenize_sql("text")
     vocab = _sql_list(_TYPO_VOCAB)
     idxs = "[" + ", ".join(str(i) for i in range(len(_TYPO_VOCAB))) + "]"
     return f"""
@@ -2010,7 +2006,7 @@ def _ngrams_sql(n: int) -> str:
 
 
 def _decontam_sql(n: int = 13) -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     grams = _ngrams_sql(n)
     return f"""
     WITH corpus AS ({_DUP_UNION_SQL}),
@@ -2069,7 +2065,7 @@ register(
 
 
 def _pack_sql(budget: int = 200, n_shards: int = 8) -> str:
-    toks = _toks_sql("text")
+    toks = tokenize_sql("text")
     return f"""
     WITH RECURSIVE base AS (
       SELECT doc_id,
@@ -2159,7 +2155,7 @@ register("prep_mixture_resample", _mixture_sql())(
 
 
 def _commonness_sql() -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     return f"""
     WITH dt AS (
       SELECT DISTINCT doc_id, token FROM (
@@ -2221,7 +2217,7 @@ register("dedup_incremental_batch", _incremental_sql())(_incremental)
 # ===========================================================================
 
 def _incremental_near_sql(k: int = 16, bands: int = 4) -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     grams = (
         "list_distinct([array_to_string(t[i+1:i+3], ' ') "
         "for i in range(0, greatest(len(t)-3, 0)+1)])"
@@ -2288,7 +2284,7 @@ def _quality_logodds_sql() -> str:
     from diagnosisextraction_ml_spark.operators.quality_model import DEFAULT_BUCKETS
 
     b = DEFAULT_BUCKETS
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     bucket = md5_hash64_sql("token") + f" % {b}"
     return f"""
     WITH tok AS (
@@ -2337,7 +2333,7 @@ def _lm_bigram_sql() -> str:
     from diagnosisextraction_ml_spark.operators.lm import DEFAULT_BUCKETS
 
     b = DEFAULT_BUCKETS
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     return f"""
     WITH t AS (SELECT doc_id, lang, {toks} AS toks FROM documents),
     bg_all AS (
@@ -2468,7 +2464,7 @@ def _dup_gram_sql(n: int = 5) -> str:
     """DuckDB twin of dedup.duplicated_gram_stats over the dup-injected
     corpus: distinct n-grams per doc, gram document-frequency by md5
     hash, per-doc duplicated fraction — exact counts, IEEE division."""
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     grams = _ngrams_sql(n)
     return f"""
     WITH corpus AS ({_DUP_UNION_SQL}),
@@ -2499,7 +2495,7 @@ register("dedup_dup_gram_stats", _dup_gram_sql())(
 # ===========================================================================
 
 def _vocab_coverage_sql() -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     return f"""
     WITH tok AS (SELECT unnest({toks}) AS w FROM documents),
     wc AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
@@ -2552,7 +2548,7 @@ FIXED_BPE_MERGES: list[tuple[str, str]] = [
 
 
 def _bpe_stats_sql() -> str:
-    toks = _toks_sql("coalesce(lower(text), '')")
+    toks = tokenize_sql("coalesce(lower(text), '')")
     rank_values = ", ".join(
         f"({_sq(a)}, {_sq(b)}, {i})" for i, (a, b) in enumerate(FIXED_BPE_MERGES)
     )
@@ -2629,7 +2625,7 @@ _BPE_VOCAB_K = 20
 
 
 def _vocab_cut_sql() -> str:
-    toks = _toks_sql("coalesce(lower(text), '')")
+    toks = tokenize_sql("coalesce(lower(text), '')")
     return f"""
     WITH tok AS (SELECT unnest({toks}) AS word FROM documents),
     wc AS (SELECT word, COUNT(*) AS n FROM tok GROUP BY word),
@@ -2662,7 +2658,7 @@ register("bpe_vocab_threshold_cut", _vocab_cut_sql())(_vocab_cut)
 # ===========================================================================
 
 def _cms_sql(depth: int = 4, width: int = 8192, k: int = 50) -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     cell = md5_hash64_sql("concat(CAST(t.r AS VARCHAR), ':', token)")
     return f"""
     WITH tok AS (SELECT unnest({toks}) AS token FROM documents),
@@ -2691,7 +2687,7 @@ def _cms_heavy(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     sk = sketch.cms_build(docs)
     exact_top = (
-        docs.select(F.explode(textstats.ws_tokens(F.col("text"))).alias("token"))
+        docs.select(F.explode(tokenize_expr(F.lower(F.col("text")))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact_n"))
         .orderBy(F.desc("exact_n"), F.asc("token"))
@@ -2889,7 +2885,7 @@ register("rollup_incremental_hourly", _rollup_sql())(_rollup_incremental)
 # ===========================================================================
 
 def _span_removal_sql(n: int = 13, min_count: int = 2) -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     gram_hash = md5_hash64_sql(f"array_to_string(t[u.i+1:u.i+{n}], ' ')")
     return f"""
     WITH corpus AS ({_DUP_UNION_SQL}),
@@ -2925,7 +2921,7 @@ def _span_intervals_sql(n: int = 13, min_count: int = 2) -> str:
     """DuckDB twin of dedup.duplicated_span_intervals — the same gram/
     coverage CTEs as _span_removal_sql, then gaps-and-islands (p −
     row_number per doc) to one row per maximal duplicated span."""
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     gram_hash = md5_hash64_sql(f"array_to_string(t[u.i+1:u.i+{n}], ' ')")
     return f"""
     WITH corpus AS ({_DUP_UNION_SQL}),
@@ -2962,12 +2958,12 @@ register("dedup_span_intervals", _span_intervals_sql())(
 # ===========================================================================
 
 def _gopher_sql() -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     t = "coalesce(text, '')"
     sw = "['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with']"
     return f"""
     WITH base AS (
-      SELECT doc_id, {t} AS t, {_toks_sql(f"lower({t})")} AS toks,
+      SELECT doc_id, {t} AS t, {tokenize_sql(f"lower({t})")} AS toks,
              list_filter(string_split_regex({t}, '\\n'), l -> trim(l) != '') AS lines
       FROM documents
     ),
@@ -3027,7 +3023,7 @@ def _c4_sql() -> str:
         "OR ends_with(trim(l), chr(39))) "
         "AND NOT contains(lower(trim(l)), 'lorem ipsum') "
         "AND NOT contains(lower(trim(l)), '{') "
-        "AND len(list_filter(string_split_regex(trim(l), '\\s+'), x -> x != '')) >= 3"
+        f"AND len({tokenize_sql('l')}) >= 3"
     )
     return f"""
     WITH base AS (
@@ -3356,7 +3352,7 @@ def _bm25_entry() -> None:
     def dbl(x: float) -> str:
         return f"CAST({x!r} AS DOUBLE)"
 
-    toks = _toks_sql("coalesce(lower(text), '')")
+    toks = tokenize_sql("coalesce(lower(text), '')")
     qvals = ", ".join(f"('{q}', '{t}')" for q, t in _BM25_QUERIES)
     sql = f"""
     WITH tok AS (SELECT doc_id, unnest({toks}) AS term FROM documents),
@@ -3604,7 +3600,7 @@ _semdedup_pruned_entry()
 # ===========================================================================
 
 def _prefix_jaccard_sql(num: int = 1, den: int = 2) -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     grams = (
         "list_distinct([array_to_string(t[i+1:i+3], ' ') "
         "for i in range(0, greatest(len(t)-3, 0)+1)])"
@@ -3672,7 +3668,7 @@ def _lm_trigram_sql() -> str:
     )
 
     b = DEFAULT_BUCKETS
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
 
     def dbl(x: float) -> str:
         return f"CAST({x!r} AS DOUBLE)"
@@ -3789,7 +3785,7 @@ register("filter_ccnet_buckets", _ccnet_sql())(_ccnet_buckets)
 # ===========================================================================
 
 def _fertility_sql() -> str:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     return f"""
     SELECT lang, count(*) AS n_docs,
            CAST(sum(CAST(len({toks}) AS BIGINT)) AS BIGINT) AS sum_tokens,
@@ -3813,9 +3809,7 @@ def _fertility(spark, sf_dir):
     (DuckDB: len/length/strlen).
     """
     docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda t: t != ""
-    )
+    toks = tokenize_expr(F.lower(F.col("text")))
     return (
         docs.select(
             "lang",
@@ -4187,7 +4181,7 @@ def _text_semdedup_entry(dim: int = 16, tau: float = 0.99) -> None:
     from diagnosisextraction_ml_spark.operators import dedup as _dd
     from diagnosisextraction_ml_spark.operators import similarity as _sim
 
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     sgn = md5_hash64_sql("concat(CAST(t.k AS VARCHAR), ':', w)")
     idf = (
         "CAST(round(CAST(1000000.0 AS DOUBLE) * "
@@ -5213,7 +5207,7 @@ _hll_overlap_entry()
 def _zipf_entry(k: int = 500) -> None:
     sql = f"""
     WITH toks AS (
-      SELECT unnest({_toks_sql('lower(text)')}) AS word FROM documents
+      SELECT unnest({tokenize_sql('lower(text)')}) AS word FROM documents
     ), topw AS (
       SELECT word, count(*) AS n FROM toks
       WHERE NOT list_contains({_sql_list(ENGLISH_STOPWORDS)}, word)
@@ -5256,7 +5250,7 @@ def _kl_entry() -> None:
     WITH counts AS (
       SELECT source AS g, word, CAST(count(*) AS BIGINT) AS n
       FROM (
-        SELECT source, unnest({_toks_sql('lower(text)')}) AS word
+        SELECT source, unnest({tokenize_sql('lower(text)')}) AS word
         FROM documents WHERE source IN {srcs}
       ) GROUP BY 1, 2
     ), groups AS (
@@ -5327,7 +5321,7 @@ def _rerank_entry(n_cand: int = 20, k: int = 10) -> None:
     # generic documents (high mean token docfreq):
     # blend = 7·bm25 − 3·commonness, both micro ints.
     sql = f"""
-    WITH tok AS (SELECT doc_id, unnest({_toks_sql("coalesce(lower(text), '')")}) AS term FROM documents),
+    WITH tok AS (SELECT doc_id, unnest({tokenize_sql("coalesce(lower(text), '')")}) AS term FROM documents),
     postings AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
     dl AS (SELECT doc_id, SUM(tf) AS dl FROM postings GROUP BY 1),
     stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS total_dl FROM dl),
@@ -5367,7 +5361,7 @@ def _rerank_entry(n_cand: int = 20, k: int = 10) -> None:
     ),
     dt AS (
       SELECT DISTINCT doc_id, token FROM (
-        SELECT doc_id, unnest(list_distinct({_toks_sql('lower(text)')})) AS token
+        SELECT doc_id, unnest(list_distinct({tokenize_sql('lower(text)')})) AS token
         FROM documents)),
     tdf AS (SELECT token, count(*) AS token_docfreq FROM dt GROUP BY token),
     common AS (
@@ -5647,7 +5641,7 @@ def _containment_entry(
 
     sql = f"""
     WITH dt AS (
-      SELECT doc_id, {_toks_sql('lower(text)')} AS t FROM documents
+      SELECT doc_id, {tokenize_sql('lower(text)')} AS t FROM documents
     ), sh AS (
       SELECT doc_id, shingle FROM (
         SELECT doc_id, unnest({_ngrams_sql(n)}) AS shingle FROM dt)
@@ -5693,7 +5687,7 @@ def _pmi_entry(k_vocab: int = 200, min_pair: int = 5, top_k: int = 100) -> None:
     sql = f"""
     WITH dt AS (
       SELECT DISTINCT doc_id AS doc, token FROM (
-        SELECT doc_id, unnest(list_distinct({_toks_sql('lower(text)')})) AS token
+        SELECT doc_id, unnest(list_distinct({tokenize_sql('lower(text)')})) AS token
         FROM documents)
     ), nd AS (
       SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents
@@ -6788,7 +6782,7 @@ def _qld_entry(k: int = 10) -> None:
     from diagnosisextraction_ml_spark.operators import search
 
     mu = float(search.QLD_MU)
-    toks = _toks_sql("coalesce(lower(text), '')")
+    toks = tokenize_sql("coalesce(lower(text), '')")
     qvals = ", ".join(f"('{q}', '{t}')" for q, t in _BM25_QUERIES)
     sql = f"""
     WITH tok AS (SELECT doc_id, unnest({toks}) AS term FROM documents),
@@ -6896,7 +6890,7 @@ _rrf_entry()
 # ===========================================================================
 
 def _entropy_entry() -> None:
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     sql = f"""
     WITH tok AS (SELECT doc_id, unnest({toks}) AS t FROM documents),
     per AS (SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c
@@ -7462,7 +7456,7 @@ def _hapax_entry() -> None:
     vocabulary occurs exactly once (healthy natural text ≈ 40-60%;
     far lower means templated/duplicated corpus, far higher means
     noise/gibberish tokens)."""
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     sql = f"""
     WITH tok AS (SELECT unnest({toks}) AS t FROM documents),
     per AS (SELECT t, CAST(count(*) AS BIGINT) AS c
@@ -7478,11 +7472,9 @@ def _hapax_entry() -> None:
     """
 
     def _fn(spark, sf_dir):
-        from diagnosisextraction_ml_spark.operators.textstats import ws_tokens
-
         docs = _t(spark, sf_dir, "documents")
         per = (
-            docs.select(F.explode(ws_tokens(F.col("text"))).alias("t"))
+            docs.select(F.explode(tokenize_expr(F.lower(F.col("text")))).alias("t"))
             .groupBy("t")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -7517,7 +7509,7 @@ def _dsir_entries() -> None:
     from diagnosisextraction_ml_spark.operators.dsir import DEFAULT_BUCKETS
 
     b = DEFAULT_BUCKETS
-    toks = _toks_sql("lower(text)")
+    toks = tokenize_sql("lower(text)")
     # grams = unigrams ∪ bigrams, one shared md5-bucket space.
     grams_cte = f"""
     t AS (SELECT doc_id, lang, {toks} AS toks FROM documents),

@@ -334,6 +334,20 @@ def test_dedup_incremental_rejects_map_columns(spark):
         dedup_incremental(batch, history)
 
 
+def test_dedup_incremental_drops_null_ids(spark):
+    """A null-id row is never a survivor and does not shadow a real-id
+    duplicate of its text — the SQL twin's min(doc_id) + IN semantics."""
+    from diagnosisextraction_ml_spark.operators.dedup import dedup_incremental
+
+    history = spark.createDataFrame([("0" * 32,)], "fingerprint string")
+    batch = spark.createDataFrame(
+        [(None, "hello world"), (5, "hello world"), (None, "only null"), (7, "fresh")],
+        "doc_id long, text string",
+    )
+    got = {tuple(r) for r in dedup_incremental(batch, history).collect()}
+    assert got == {(5, "hello world"), (7, "fresh")}
+
+
 def test_duplicated_gram_stats_hand_case(spark):
     from diagnosisextraction_ml_spark.operators.dedup import duplicated_gram_stats
 

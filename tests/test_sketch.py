@@ -21,10 +21,10 @@ def corpus(spark):
 
 
 def _exact_counts(spark, corpus):
-    from diagnosisextraction_ml_spark.operators.textstats import ws_tokens
+    from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
     return (
-        corpus.select(F.explode(ws_tokens(F.col("text"))).alias("token"))
+        corpus.select(F.explode(tokenize_expr(F.lower(F.col("text")))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact_n"))
     )

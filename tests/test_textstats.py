@@ -415,6 +415,32 @@ def test_script_census_classes_agree_with_duckdb(spark):
         assert tuple(row) == tuple(want), (t, tuple(row), want)
 
 
+def test_tokenizer_twins_agree_with_python_split(spark):
+    """tokenize_expr (Java \\s), its DuckDB twin tokenize_sql (RE2) and
+    Python's argument-less str.split agree, vertical tab included — a
+    character the registry testdata never contains."""
+    import duckdb
+
+    from diagnosisextraction_ml_spark.functions.text import tokenize_expr, tokenize_sql
+
+    texts = [None, "", "   ", " A  b ", "A\tB\nc\r\nd", "a\x0bb"]
+    want = [None if t is None else t.lower().split() for t in texts]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    got_spark = [
+        r["toks"]
+        for r in df.select("i", tokenize_expr(F.lower("text")).alias("toks"))
+        .orderBy("i")
+        .collect()
+    ]
+    con = duckdb.connect()
+    got_duck = [
+        con.execute(f"SELECT {tokenize_sql('lower(text)')} FROM (SELECT ? AS text)", [t]).fetchone()[0]
+        for t in texts
+    ]
+    assert got_spark == want
+    assert got_duck == want
+
+
 def test_pack_token_stream_tiles_exactly(spark):
     """Concat-and-split invariants: every doc's segments cover exactly
     its tokens; every pack except each shard's last is exactly full;

@@ -5,7 +5,8 @@ Usage: python tools/explain_all.py [sf_dir] [name_filter]
 The audit loop: after a query goes green, read its plan here and check
 the things that matter at 100 TB — PushedFilters on the scans, pruned
 ReadSchema, BroadcastHashJoin for dim joins, no CartesianProduct, the
-expected number of Exchanges, WholeStageCodegen spans.
+expected number of Exchanges, WholeStageCodegen spans. For a
+before/after plan diff, redirect one run per side to a file.
 """
 
 from __future__ import annotations

@@ -6,7 +6,8 @@ write (full execution, no driver collect) and prints one JSON line.
 
 Usage: python tools/scale_bench.py <sf_dir> <q1,q2,...> [repeats]
 The first run of each query includes plan/codegen warmup; with
-repeats>1 the minimum wall is reported (steady-state).
+repeats>1 the minimum wall is reported (steady-state); repeats=2 is
+the min-of-2 noop A/B timing of a few queries.
 """
 
 from __future__ import annotations
