@@ -99,6 +99,21 @@ def tokenize_sql(expr: str) -> str:
     return f"list_filter(string_split_regex(trim({expr}), '[\\s\\v]+'), x -> x != '')"
 
 
+def normalize_ws(col: Column | str) -> Column:
+    """Whitespace-normalized text: trim spaces, collapse every
+    whitespace run to one space. The text the exact-dedup fingerprints
+    hash (``md5(normalize_ws(text))``), so two documents that differ
+    only in spacing share a fingerprint."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.regexp_replace(F.trim(c), r"\s+", " ")
+
+
+def normalize_ws_sql(expr: str) -> str:
+    r"""DuckDB-SQL twin of :func:`normalize_ws`; ``\v`` added to RE2's
+    ``\s`` for the same reason as in :func:`tokenize_sql`."""
+    return f"regexp_replace(trim({expr}), '[\\s\\v]+', ' ', 'g')"
+
+
 def remove_stopwords_expr(tokens: Column, stopwords: Sequence[str]) -> Column:
     """T6 — drop stopwords from a token array (native, codegen'd).
 

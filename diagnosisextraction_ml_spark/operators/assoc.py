@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from diagnosisextraction_ml_spark.operators.dedup import array_pairs
+
 
 def basket_pairs(
     tx: DataFrame,
@@ -53,18 +55,7 @@ def basket_pairs(
         F.array_sort(F.collect_set(F.col(item_col))).alias("items")
     )
     capped = baskets.filter(F.size("items").between(2, max_basket))
-    # one Generate of pre-built pair structs — same fusion as
-    # association_rules (the two-explode form copied the full basket
-    # array per item row before the second explode)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("items"),
-            lambda x, i: F.transform(
-                F.slice(F.col("items"), i + 2, F.size(F.col("items"))),
-                lambda y: F.struct(x.alias("item_a"), y.alias("item_b")),
-            ),
-        )
-    )
+    pair_structs = array_pairs(F.col("items"), "item_a", "item_b")
     return capped.select("tx", F.explode(pair_structs).alias("p")).select(
         "tx", F.col("p.item_a").alias("item_a"), F.col("p.item_b").alias("item_b")
     )
@@ -107,22 +98,9 @@ def association_rules(
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("item_count"))
     ).localCheckpoint()
-    # In-basket pair expansion as ONE Generate: items is sorted, so the
-    # (a, b) a<b pairs are a flatten of per-index suffix slices built
-    # inside a single expression. The previous two-explode form first
-    # materialized |items| rows each carrying the FULL basket array
-    # (O(basket²) array copies as Generate input) before the second
-    # explode; this emits the same pair rows with no intermediate
-    # array-per-row blowup.
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("items"),
-            lambda x, i: F.transform(
-                F.slice(F.col("items"), i + 2, F.size(F.col("items"))),
-                lambda y: F.struct(x.alias("item_a"), y.alias("item_b")),
-            ),
-        )
-    )
+    # In-basket pair expansion as ONE Generate (items is sorted, so
+    # every pair has item_a < item_b).
+    pair_structs = array_pairs(F.col("items"), "item_a", "item_b")
     # localCheckpoint: `pairs` feeds BOTH sides of the directed-rules
     # union — left lazy, the C(b,2) pair Generate + two-level
     # aggregation executed twice (r15/r16 plan audit: the subtree

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import KNUTH, M31, md5_hash64
-from diagnosisextraction_ml_spark.functions.text import tokenize_expr
+from diagnosisextraction_ml_spark.functions.text import normalize_ws, tokenize_expr
 
 # Shingling runs at the input's parallelism: fan_out spreads a narrow
 # (1-2 partition) scan so tokenize+zip+concat is not pinned to 1-2 cores.
@@ -51,9 +51,8 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     form stays in the sketching paths where collisions only cost
     recall/precision, not correctness.
     """
-    normalized = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
     return (
-        df.select(F.md5(normalized).alias("fingerprint"), F.col(id_col))
+        df.select(F.md5(normalize_ws(text_col)).alias("fingerprint"), F.col(id_col))
         .groupBy("fingerprint")
         .agg(F.count("*").alias("n_dups"), F.min(id_col).alias("keep_id"))
         .filter(F.col("n_dups") > 1)
@@ -68,8 +67,7 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     require every carried column to be orderable (a map column would
     break), where the window orders by id alone.
     """
-    normalized = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
-    fp = F.md5(normalized).alias("__fp")
+    fp = F.md5(normalize_ws(text_col)).alias("__fp")
     from pyspark.sql import Window
 
     w = Window.partitionBy("__fp").orderBy(F.col(id_col).asc())
@@ -105,11 +103,10 @@ def dedup_first_seen_within_horizon(
 
     Output: (id, fingerprint, window_start).
     """
-    normalized = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
     win = F.window(F.col(ts_col), horizon)
     base = df.select(
         F.col(id_col),
-        F.md5(normalized).alias("fingerprint"),
+        F.md5(normalize_ws(text_col)).alias("fingerprint"),
         F.col(ts_col).alias("__ts"),
         win["start"].alias("window_start"),
     )
@@ -310,6 +307,83 @@ def minhash_signatures(
     )
 
 
+def array_pairs(arr: Column, a: str, b: str) -> Column:
+    """Every (arr[i], arr[j]) with i < j as ``array<struct<a, b>>`` —
+    on a sorted array, all pairs with a < b.
+
+    A flatten of per-index suffix slices inside one expression, so a
+    single explode emits the C(n,2) pair rows; the two-explode form
+    first materialized one row per element carrying the FULL array
+    (O(n²) array copies as Generate input).
+    """
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )
+
+
+def _collapse_exact_texts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """One representative per byte-identical text: (id, text,
+    ``__members``), where ``__members`` is the group's sorted id list
+    and id its min. The pair operators' ``collapse_exact`` mode runs
+    on these rows and expands ``__members`` back at the pair stage,
+    so sketch/index cost is O(distinct texts) and an m-copy duplicate
+    group no longer costs C(m,2) join rows.
+
+    The key is the raw text (null counts as ""), NOT the whitespace-
+    normalized fingerprint: ``_gram_col`` shingles a short document
+    as its whole text, so ``"a  b"`` and ``"a b"`` must stay apart.
+
+    localCheckpoint: the representatives feed BOTH the shingle
+    pipeline and the member-list joins. Left lazy, each consumer
+    re-executes the full corpus scan + md5 collapse shuffle (r15 plan
+    audit: the collapse subtree appeared twice, zero ReusedExchange).
+    The materialized relation is one row per DISTINCT text, the
+    relation every consumer needs anyway.
+    """
+    groups = df.groupBy(
+        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("__fp")
+    ).agg(
+        F.array_sort(F.collect_list(id_col)).alias("__members"),
+        F.min(text_col).alias(text_col),
+    )
+    return groups.select(
+        F.col("__members")[0].alias(id_col), F.col(text_col), F.col("__members")
+    ).localCheckpoint()
+
+
+def _expand_members(
+    rep_pairs: DataFrame, reps: DataFrame, id_col: str, *cols
+) -> DataFrame:
+    """Representative pairs (id_a, id_b, ...) → member pairs: every
+    member of id_a's group pairs with every member of id_b's, the
+    other ``rep_pairs`` columns riding along. Member ids may invert
+    the representative order, so the ids re-normalize with
+    least/greatest. ``cols`` (default: the carried columns) are the
+    output columns after id_a/id_b; they may read ``u`` (the id_a-side
+    member) and ``v`` for values that are not symmetric.
+    """
+    carried = [c for c in rep_pairs.columns if c not in ("id_a", "id_b")]
+    ma = reps.select(F.col(id_col).alias("id_a"), F.col("__members").alias("__ma"))
+    mb = reps.select(F.col(id_col).alias("id_b"), F.col("__members").alias("__mb"))
+    return (
+        rep_pairs.join(ma, "id_a")
+        .join(mb, "id_b")
+        .select(F.explode("__ma").alias("u"), "__mb", *carried)
+        .select("u", F.explode("__mb").alias("v"), *carried)
+        .select(
+            F.least("u", "v").alias("id_a"),
+            F.greatest("u", "v").alias("id_b"),
+            *(cols or carried),
+        )
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -338,7 +412,8 @@ def minhash_lsh_pairs(
     guard, observable as missing huge buckets).
 
     ``collapse_exact`` (default on) first groups byte-identical texts
-    and runs the shingle→minhash→banding pipeline on ONE representative
+    (:func:`_collapse_exact_texts`) and runs the
+    shingle→minhash→banding pipeline on ONE representative
     per distinct text, expanding the member id lists back at the bucket
     stage. Exact duplicates have identical signatures and land in
     identical buckets, so the output — including within-duplicate-group
@@ -365,24 +440,7 @@ def minhash_lsh_pairs(
     impossible to misread as a similarity signal.
     """
     if collapse_exact:
-        groups = (
-            df.groupBy(F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("__fp"))
-            .agg(
-                F.array_sort(F.collect_list(id_col)).alias("__members"),
-                F.min(text_col).alias(text_col),
-            )
-        )
-        # localCheckpoint: reps feeds BOTH the shingle→minhash pipeline
-        # and the bucket-stage member-list join. Left lazy, each
-        # consumer re-executes the full corpus scan + md5 collapse
-        # shuffle (r15 plan audit: the collapse subtree appeared twice,
-        # zero ReusedExchange) — the same fix
-        # prefix_filter_jaccard_pairs already carries. The materialized
-        # relation is one row per DISTINCT text, the relation both
-        # consumers need anyway.
-        reps = groups.select(
-            F.col("__members")[0].alias(id_col), F.col(text_col), F.col("__members")
-        ).localCheckpoint()
+        reps = _collapse_exact_texts(df, text_col, id_col)
     else:
         reps = df.select(F.col(id_col), F.col(text_col))
     buckets = band_buckets(reps, text_col, id_col, shingle_n, k, bands)
@@ -398,15 +456,7 @@ def minhash_lsh_pairs(
             F.array_sort(F.collect_list(id_col)).alias("ids")
         )
     ids = ids.filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-    all_pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
+    all_pairs = array_pairs(F.col("ids"), "id_a", "id_b")
     if star_over is not None:
         # ids is sorted, so ids[0] is the bucket min — the star center
         star = F.transform(
@@ -436,68 +486,42 @@ def minhash_lsh_pairs(
 # n-gram Jaccard (exact pairwise, join-shaped)
 # --------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(
+def _shingle_index_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_doc_freq: int | None = 1000,
-    collapse_exact: bool = True,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
+    reps: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    n: int,
+    max_doc_freq: int | None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The inverted-index join behind :func:`ngram_jaccard_pairs` and
+    :func:`ngram_containment_pairs`: distinct shingles of ``df`` — or
+    of ``reps``, its :func:`_collapse_exact_texts` representatives,
+    when given — self-joined on the shingle so only documents that
+    share one ever meet.
 
-    Inverted-index join: explode distinct shingles, self-join on the
-    shingle (so only docs that share something ever meet), count the
-    intersection, derive the union from per-doc sizes. At scale this is
-    the verify stage after :func:`minhash_lsh_pairs` prunes candidates;
-    on its own it is quadratic only within shingle-share groups —
-    ``max_doc_freq`` prunes shingles shared by more than that many
-    docs from the *join*. It is ON BY DEFAULT (1000): one boilerplate
-    shingle shared by 10⁶ docs would otherwise expand to ~5·10¹¹ join
-    pairs — the defining scale-killer of inverted-index similarity.
-    Affected pairs' Jaccard becomes a slight *underestimate* (the
-    pruned shingles still count toward the per-doc sizes in the union,
-    but not toward the intersection — boilerplate n-grams carry no
-    discriminative signal anyway; the standard inverted-index guard).
-    Pass ``max_doc_freq=None`` for the exact all-shingles computation
-    on bounded corpora.
+    Shingles held by more than ``max_doc_freq`` raw documents leave
+    the join (not the per-doc sizes). The doc-freq counts come from a
+    groupBy — map-side partial aggregation, so a hot shingle never
+    funnels its raw rows through one task, unlike a per-shingle window
+    — joined back as a semi-filter. With ``reps`` each representative's
+    shingle counts for its whole duplicate group (Σ group sizes = raw
+    doc count per shingle), so the cap stays exact under the collapse.
 
-    The doc-freq counts come from a groupBy (map-side partial
-    aggregation — a hot shingle never funnels its raw rows through one
-    task, unlike a per-shingle window) joined back as a semi-filter.
-
-    ``collapse_exact`` (default on): byte-identical texts collapse to
-    one representative before the index — the same quadratic-in-
-    multiplicity defense as :func:`ngram_containment_pairs` (an m-copy
-    duplicate group inside the doc-freq cap costs C(m,2) join pairs;
-    measured 58s → ~4s at sf1 under 10× multiplicity). The doc-freq
-    cap stays exact by weighting representative shingles with group
-    size; within-group pairs are emitted closed-form with
-    n_common = |allowed shingles| and J = asz/(2·sz − asz). Output
-    row-identical to the uncollapsed run (equivalence test-pinned).
+    Returns (pairs, sizes, asz): pairs = (id_a, id_b, n_common, sz_a,
+    sz_b) with id_a < id_b, n_common the allowed-shingle intersection;
+    sizes = (id, sz) distinct shingles per doc; asz = (id, asz) allowed
+    shingles per doc.
     """
-    if collapse_exact:
-        groups = df.groupBy(
-            F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("__fp")
-        ).agg(
-            F.array_sort(F.collect_list(id_col)).alias("__members"),
-            F.min(text_col).alias(text_col),
-        )
-        reps = groups.select(
-            F.col("__members")[0].alias(id_col),
-            F.col(text_col),
-            F.col("__members"),
-            F.size("__members").cast("long").alias("__gsz"),
-        ).localCheckpoint()
-        base = reps.select(F.col(id_col), F.col(text_col))
-    else:
-        base = df.select(F.col(id_col), F.col(text_col))
-    sh = shingles(base, text_col, id_col, n)
+    src = df if reps is None else reps
+    sh = shingles(src.select(F.col(id_col), F.col(text_col)), text_col, id_col, n)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     if max_doc_freq is not None:
-        if collapse_exact:
-            wsh = sh.join(reps.select(F.col(id_col), "__gsz"), id_col)
+        if reps is not None:
+            gsz = reps.select(
+                F.col(id_col), F.size("__members").cast("long").alias("__gsz")
+            )
+            wsh = sh.join(gsz, id_col)
             dfreq = wsh.groupBy("shingle").agg(F.sum("__gsz").alias("__df"))
         else:
             dfreq = sh.groupBy("shingle").agg(F.count("*").alias("__df"))
@@ -516,10 +540,54 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b"), sizes, asz
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.5,
+    max_doc_freq: int | None = 1000,
+    collapse_exact: bool = True,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
+
+    Inverted-index join (:func:`_shingle_index_pairs`): explode
+    distinct shingles, self-join on the shingle (so only docs that
+    share something ever meet), count the intersection, derive the
+    union from per-doc sizes. At scale this is
+    the verify stage after :func:`minhash_lsh_pairs` prunes candidates;
+    on its own it is quadratic only within shingle-share groups —
+    ``max_doc_freq`` prunes shingles shared by more than that many
+    docs from the *join*. It is ON BY DEFAULT (1000): one boilerplate
+    shingle shared by 10⁶ docs would otherwise expand to ~5·10¹¹ join
+    pairs — the defining scale-killer of inverted-index similarity.
+    Affected pairs' Jaccard becomes a slight *underestimate* (the
+    pruned shingles still count toward the per-doc sizes in the union,
+    but not toward the intersection — boilerplate n-grams carry no
+    discriminative signal anyway; the standard inverted-index guard).
+    Pass ``max_doc_freq=None`` for the exact all-shingles computation
+    on bounded corpora.
+
+    ``collapse_exact`` (default on): byte-identical texts collapse to
+    one representative before the index (:func:`_collapse_exact_texts`)
+    — the same quadratic-in-
+    multiplicity defense as :func:`ngram_containment_pairs` (an m-copy
+    duplicate group inside the doc-freq cap costs C(m,2) join pairs;
+    measured 58s → ~4s at sf1 under 10× multiplicity). The doc-freq
+    cap stays exact by weighting representative shingles with group
+    size; within-group pairs are emitted closed-form with
+    n_common = |allowed shingles| and J = asz/(2·sz − asz). Output
+    row-identical to the uncollapsed run (equivalence test-pinned).
+    """
+    reps = _collapse_exact_texts(df, text_col, id_col) if collapse_exact else None
+    pairs, sizes, asz = _shingle_index_pairs(
+        df, reps, text_col, id_col, n, max_doc_freq
+    )
     rep_pairs = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
+        pairs.withColumn(
             "jaccard",
             F.round(
                 F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")), 6
@@ -528,23 +596,10 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "n_common", "jaccard")
     )
-    if not collapse_exact:
+    if reps is None:
         return rep_pairs
 
-    ma = reps.select(F.col(id_col).alias("id_a"), F.col("__members").alias("__ma"))
-    mb = reps.select(F.col(id_col).alias("id_b"), F.col("__members").alias("__mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(F.explode("__ma").alias("u"), "__mb", "n_common", "jaccard")
-        .select("u", F.explode("__mb").alias("v"), "n_common", "jaccard")
-        .select(
-            F.least("u", "v").alias("id_a"),
-            F.greatest("u", "v").alias("id_b"),
-            "n_common",
-            "jaccard",
-        )
-    )
+    cross = _expand_members(rep_pairs, reps, id_col)
     intra = (
         reps.filter(F.size("__members") >= 2)
         .join(sizes, id_col)
@@ -557,20 +612,7 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("__members"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("__members"), i + 2,
-                                F.size(F.col("__members")),
-                            ),
-                            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("p"),
+            F.explode(array_pairs(F.col("__members"), "id_a", "id_b")).alias("p"),
             F.col("asz").alias("n_common"),
             F.col("jaccard"),
         )
@@ -1300,7 +1342,9 @@ def dedup_incremental(
     Rows with a null ``id_col`` are dropped before the fingerprint
     pass: they cannot be appended as min-id representatives, and
     struct-min sorts null first, so one would otherwise shadow a
-    real-id duplicate of the same text.
+    real-id duplicate of the same text. Rows with a null text share
+    one group, as in :func:`dedup_exact` (min id survives), and never
+    match history: ``md5(null)`` is null, which no join key equals.
 
     Struct-min orders every column, so a map-typed column (at any
     nesting depth) is rejected with ``ValueError``. Column names may
@@ -1319,10 +1363,9 @@ def dedup_incremental(
     def col(c: str) -> Column:
         return F.col("`" + c.replace("`", "``") + "`")
 
-    normalized = F.regexp_replace(F.trim(col(text_col)), r"\s+", " ")
     other_cols = [c for c in new_df.columns if c != id_col]
     fp = new_df.filter(col(id_col).isNotNull()).select(
-        F.md5(normalized).alias("fingerprint"),
+        F.md5(normalize_ws(col(text_col))).alias("fingerprint"),
         F.struct(col(id_col), *[col(c) for c in other_cols]).alias("__row"),
     )
     survivors = (
@@ -1339,8 +1382,7 @@ def index_fingerprints(
 ) -> DataFrame:
     """Distinct normalized-text fingerprints of a batch — the rows to
     append to the historical index after :func:`dedup_incremental`."""
-    normalized = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
-    return df.select(F.md5(normalized).alias("fingerprint")).distinct()
+    return df.select(F.md5(normalize_ws(text_col)).alias("fingerprint")).distinct()
 
 
 def duplicated_gram_stats(
@@ -1794,8 +1836,9 @@ def prefix_filter_jaccard_pairs(
     the reported jaccard is one exactly-rounded division.
 
     ``collapse_exact`` (default on) is the same duplicate-multiplicity
-    defense as in :func:`lsh_band_pairs`: byte-identical texts collapse
-    to one representative before the prefix join — which matters MORE
+    defense as in :func:`minhash_lsh_pairs`: byte-identical texts
+    collapse to one representative before the prefix join
+    (:func:`_collapse_exact_texts`) — which matters MORE
     here than for LSH, because exact duplicates all satisfy J=1 ≥ t, so
     the verify join's output alone grows quadratically in group size
     (measured: 10× duplicate multiplicity → 14× wall before the
@@ -1809,15 +1852,7 @@ def prefix_filter_jaccard_pairs(
     """
     num, den = threshold_num, threshold_den
     if collapse_exact:
-        groups = df.groupBy(
-            F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("__fp")
-        ).agg(
-            F.array_sort(F.collect_list(id_col)).alias("__members"),
-            F.min(text_col).alias(text_col),
-        )
-        reps = groups.select(
-            F.col("__members")[0].alias(id_col), F.col(text_col), F.col("__members")
-        ).localCheckpoint()
+        reps = _collapse_exact_texts(df, text_col, id_col)
         base = reps.select(F.col(id_col), F.col(text_col))
     else:
         base = df.select(F.col(id_col), F.col(text_col))
@@ -1959,34 +1994,7 @@ def prefix_filter_jaccard_pairs(
     if not collapse_exact:
         return rep_pairs
 
-    # Expand representative pairs back to member pairs. Member ids may
-    # invert the rep order, so re-normalize with least/greatest
-    # (n_common/jaccard are symmetric).
-    ma = reps.select(F.col(id_col).alias("id_a"), F.col("__members").alias("__ma"))
-    mb = reps.select(F.col(id_col).alias("id_b"), F.col("__members").alias("__mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.explode("__ma").alias("u"),
-            F.col("__mb"),
-            "n_common",
-            "jaccard",
-        )
-        .select(
-            F.col("u"),
-            F.explode("__mb").alias("v"),
-            "n_common",
-            "jaccard",
-        )
-        .select(
-            F.least("u", "v").alias("id_a"),
-            F.greatest("u", "v").alias("id_b"),
-            "n_common",
-            "jaccard",
-        )
-    )
-    out = cross
+    out = _expand_members(rep_pairs, reps, id_col)
     if num <= den:  # J = 1 passes the threshold: within-group pairs
         str_sizes = sharr.select(
             F.col(id_col), F.size("__grams").cast("long").alias("sz")
@@ -1995,23 +2003,7 @@ def prefix_filter_jaccard_pairs(
             reps.join(str_sizes, id_col)
             .filter(F.size("__members") >= 2)
             .select(
-                F.explode(
-                    F.flatten(
-                        F.transform(
-                            F.col("__members"),
-                            lambda x, i: F.transform(
-                                F.slice(
-                                    F.col("__members"),
-                                    i + 2,
-                                    F.size(F.col("__members")),
-                                ),
-                                lambda y: F.struct(
-                                    x.alias("id_a"), y.alias("id_b")
-                                ),
-                            ),
-                        )
-                    )
-                ).alias("p"),
+                F.explode(array_pairs(F.col("__members"), "id_a", "id_b")).alias("p"),
                 F.col("sz"),
             )
             .select(
@@ -2170,7 +2162,8 @@ def ngram_containment_pairs(
     dedup taxonomy, off the same inverted-index join as
     :func:`ngram_jaccard_pairs` (same doc-freq semi-filter, same
     map-side-combined intersection counts — only the accept test
-    changes). A pair is emitted when EITHER direction's containment
+    changes; :func:`_shingle_index_pairs`). A pair is emitted when
+    EITHER direction's containment
     reaches the exact rational threshold, tested by integer
     cross-multiplication; the reported values are exactly-rounded
     divisions.
@@ -2184,7 +2177,8 @@ def ngram_containment_pairs(
     m-copy duplicate group INSIDE the doc-freq cap, so a crawl-scale
     corpus of verbatim clones blows the join quadratically (measured
     34s at sf1 under gen_sf's 10× multiplicity). Byte-identical texts
-    collapse to one representative BEFORE the index; the doc-freq cap
+    collapse to one representative BEFORE the index
+    (:func:`_collapse_exact_texts`); the doc-freq cap
     stays exact by weighting each representative's shingles with its
     group size (Σ sizes = raw doc count per shingle); cross-group pairs
     expand from representative pairs with the containment values
@@ -2196,51 +2190,12 @@ def ngram_containment_pairs(
     to the uncollapsed run.
     """
     num, den = threshold_num, threshold_den
-    if collapse_exact:
-        groups = df.groupBy(
-            F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("__fp")
-        ).agg(
-            F.array_sort(F.collect_list(id_col)).alias("__members"),
-            F.min(text_col).alias(text_col),
-        )
-        reps = groups.select(
-            F.col("__members")[0].alias(id_col),
-            F.col(text_col),
-            F.col("__members"),
-            F.size("__members").cast("long").alias("__gsz"),
-        ).localCheckpoint()
-        base = reps.select(F.col(id_col), F.col(text_col))
-    else:
-        base = df.select(F.col(id_col), F.col(text_col))
-    sh = shingles(base, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    if max_doc_freq is not None:
-        if collapse_exact:
-            # exact raw-corpus doc frequency: each representative's
-            # shingle counts for its whole duplicate group
-            wsh = sh.join(reps.select(F.col(id_col), "__gsz"), id_col)
-            dfreq = wsh.groupBy("shingle").agg(F.sum("__gsz").alias("__df"))
-        else:
-            dfreq = sh.groupBy("shingle").agg(F.count("*").alias("__df"))
-        allowed = dfreq.filter(F.col("__df") <= max_doc_freq).select("shingle")
-        shf = sh.join(allowed, "shingle", "left_semi")
-    else:
-        shf = sh
-    asz = shf.groupBy(id_col).agg(F.count("*").alias("asz"))
-    a = shf.select(F.col(id_col).alias("id_a"), "shingle")
-    b = shf.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
+    reps = _collapse_exact_texts(df, text_col, id_col) if collapse_exact else None
+    pairs, sizes, asz = _shingle_index_pairs(
+        df, reps, text_col, id_col, n, max_doc_freq
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     rep_pairs = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(
+        pairs.filter(
             (F.lit(den) * F.col("n_common") >= F.lit(num) * F.col("sz_a"))
             | (F.lit(den) * F.col("n_common") >= F.lit(num) * F.col("sz_b"))
         )
@@ -2252,36 +2207,23 @@ def ngram_containment_pairs(
             F.round(F.col("n_common") / F.col("sz_b"), 6).alias("containment_b"),
         )
     )
-    if not collapse_exact:
+    if reps is None:
         return rep_pairs
 
-    ma = reps.select(F.col(id_col).alias("id_a"), F.col("__members").alias("__ma"))
-    mb = reps.select(F.col(id_col).alias("id_b"), F.col("__members").alias("__mb"))
+    # containment is ASYMMETRIC: when the member order inverts the
+    # representative order, the a/b values swap roles
     swap = F.col("u") > F.col("v")
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.explode("__ma").alias("u"), "__mb",
-            "n_common", "containment_a", "containment_b",
-        )
-        .select(
-            "u", F.explode("__mb").alias("v"),
-            "n_common", "containment_a", "containment_b",
-        )
-        .select(
-            F.least("u", "v").alias("id_a"),
-            F.greatest("u", "v").alias("id_b"),
-            "n_common",
-            # containment is ASYMMETRIC: when the member order inverts
-            # the representative order, the a/b values swap roles
-            F.when(swap, F.col("containment_b"))
-            .otherwise(F.col("containment_a"))
-            .alias("containment_a"),
-            F.when(swap, F.col("containment_a"))
-            .otherwise(F.col("containment_b"))
-            .alias("containment_b"),
-        )
+    cross = _expand_members(
+        rep_pairs,
+        reps,
+        id_col,
+        "n_common",
+        F.when(swap, F.col("containment_b"))
+        .otherwise(F.col("containment_a"))
+        .alias("containment_a"),
+        F.when(swap, F.col("containment_a"))
+        .otherwise(F.col("containment_b"))
+        .alias("containment_b"),
     )
     intra = (
         reps.filter(F.size("__members") >= 2)
@@ -2289,20 +2231,7 @@ def ngram_containment_pairs(
         .join(asz, id_col)
         .filter(F.lit(den) * F.col("asz") >= F.lit(num) * F.col("sz"))
         .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("__members"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("__members"), i + 2,
-                                F.size(F.col("__members")),
-                            ),
-                            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("p"),
+            F.explode(array_pairs(F.col("__members"), "id_a", "id_b")).alias("p"),
             F.col("asz"),
             F.round(F.col("asz") / F.col("sz"), 6).alias("__c"),
         )
@@ -2343,10 +2272,9 @@ def cross_source_dup_matrix(
     Output: (source_a, source_b, n_dup_pairs, n_groups), source_a ≤
     source_b lexicographically.
     """
-    normalized = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
     per = (
         df.select(
-            F.md5(normalized).alias("fp"),
+            F.md5(normalize_ws(text_col)).alias("fp"),
             F.col(source_col).alias("src"),
         )
         .groupBy("fp", "src")

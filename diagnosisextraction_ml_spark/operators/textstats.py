@@ -19,7 +19,7 @@ from diagnosisextraction_ml_spark.functions.stopwords import (
     DUTCH_STOPWORDS,
     ENGLISH_STOPWORDS,
 )
-from diagnosisextraction_ml_spark.functions.text import tokenize_expr
+from diagnosisextraction_ml_spark.functions.text import normalize_ws, tokenize_expr
 
 # A BPE-ish word-piece pattern: runs of letters, runs of digits, or a
 # single non-space symbol — the shape GPT-style pre-tokenizers use.
@@ -118,9 +118,7 @@ def fingerprint_expr(col: Column | str) -> Column:
     stand-in for a rolling hash (same fingerprint ⇔ same normalized
     byte sequence), used for exact dedup and change detection.
     """
-    c = _txt(col)
-    normalized = F.regexp_replace(F.trim(c), r"\s+", " ")
-    return md5_hash64(normalized)
+    return md5_hash64(normalize_ws(_txt(col)))
 
 
 def document_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

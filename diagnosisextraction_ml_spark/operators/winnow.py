@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import md5_hash64
+from diagnosisextraction_ml_spark.functions.text import normalize_ws
 
 DEFAULT_K = 8  # gram size (chars)
 DEFAULT_W = 4  # window size (grams); guarantee length = k + w - 1
@@ -48,7 +49,7 @@ _HASH_MOD = 1 << 40  # 40-bit gram hash; 40 + 22 = 62 bits packed
 
 def _normalized(text_col: str):
     """Winnowing pre-pass: casefold + collapse runs of whitespace."""
-    return F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    return normalize_ws(F.lower(F.col(text_col)))
 
 
 def winnow_fingerprints(

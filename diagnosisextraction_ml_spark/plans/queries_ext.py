@@ -37,6 +37,8 @@ from diagnosisextraction_ml_spark.functions.text import (
     STICKY_CHARS_RE,
     fix_xml_artefacts,
     fold_accents,
+    normalize_ws,
+    normalize_ws_sql,
     remove_stopwords_expr,
     simple_cleaning,
     tokenize_expr,
@@ -273,7 +275,7 @@ def _doc_stats_sql() -> str:
         f"(CASE WHEN {n_en} > {n_nl} AND {n_en} > 0 THEN 'en' "
         f"WHEN {n_nl} > {n_en} AND {n_nl} > 0 THEN 'nl' ELSE 'other' END)"
     )
-    normalized = f"regexp_replace(trim({c}), '\\s+', ' ', 'g')"
+    normalized = normalize_ws_sql(c)
     bpe = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
     return f"""
     SELECT doc_id,
@@ -320,7 +322,7 @@ register(
     "dedup_exact_groups",
     f"""
     WITH corpus AS ({_DUP_UNION_SQL})
-    SELECT md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS fingerprint,
+    SELECT md5({normalize_ws_sql('text')}) AS fingerprint,
            count(*) AS n_dups, min(doc_id) AS keep_id
     FROM corpus GROUP BY 1 HAVING count(*) > 1
     """,
@@ -491,7 +493,7 @@ register(
                  make_timestamp(CAST((1600000000 + doc_id % 7200) AS BIGINT) * 1000000) AS ts
           FROM corpus),
     fp AS (SELECT doc_id,
-                  md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS fingerprint,
+                  md5({normalize_ws_sql('text')}) AS fingerprint,
                   ts, date_trunc('hour', ts) AS window_start
            FROM w)
     SELECT doc_id, fingerprint, window_start FROM fp
@@ -702,7 +704,7 @@ def _corpus_source_report(spark, sf_dir):
     base = docs.select(
         "source",
         "lang",
-        F.md5(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")).alias("__fp"),
+        F.md5(normalize_ws("text")).alias("__fp"),
         token_count_ws(F.col("text")).cast("long").alias("__toks"),
         F.col("n_chars"),
     )
@@ -723,10 +725,10 @@ register(
     "corpus_source_report",
     f"""
     SELECT source, lang, count(*) AS n_docs,
-           count(DISTINCT md5(regexp_replace(trim(text), '\\s+', ' ', 'g')))
+           count(DISTINCT md5({normalize_ws_sql('text')}))
              AS n_distinct_texts,
            CAST(count(*) - count(DISTINCT
-                 md5(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS DOUBLE)
+                 md5({normalize_ws_sql('text')})) AS DOUBLE)
              / count(*) AS dup_rate,
            CAST(sum(len({tokenize_sql('text')})) AS BIGINT) AS total_tokens,
            CAST(sum(n_chars) AS DOUBLE) / count(*) AS mean_chars
@@ -1740,7 +1742,7 @@ def _pipeline_llm_prep(spark, sf_dir):
 
 def _pipeline_llm_prep_sql() -> str:
     toks = tokenize_sql("text")
-    fp = "md5(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
+    fp = f"md5({normalize_ws_sql('text')})"
     return f"""
     WITH corpus AS ({_DUP_UNION_SQL}),
     gated AS (SELECT doc_id, text FROM corpus WHERE {_quality_sql('text')} >= 0.3),
@@ -1890,7 +1892,7 @@ def _pipeline_llm_prep_mm_gated(spark, sf_dir):
 
 def _pipeline_llm_prep_mm_gated_sql() -> str:
     toks = tokenize_sql("text")
-    fp = "md5(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
+    fp = f"md5({normalize_ws_sql('text')})"
     return f"""
     WITH img_ok AS (
       SELECT asset_id FROM read_parquet('{_mm_fixture_path()}')
@@ -2178,8 +2180,10 @@ register("doc_token_commonness", _commonness_sql())(
 def _incremental_sql() -> str:
     """History = even base docs; batch = odd docs + copies of even docs
     (dup-union shifts), so the copies drop against history and the
-    batch's internal dups collapse to the min id."""
-    fp = "md5(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
+    batch's internal dups collapse to the min id. NOT EXISTS, not
+    NOT IN: a null fingerprint never matches history (a null in
+    history would make every NOT IN test NULL and empty the batch)."""
+    fp = f"md5({normalize_ws_sql('text')})"
     return f"""
     WITH history AS (
       SELECT DISTINCT {fp} AS fingerprint FROM documents WHERE doc_id % 2 = 0),
@@ -2190,7 +2194,8 @@ def _incremental_sql() -> str:
     fps AS (SELECT {fp} AS fingerprint, doc_id FROM batch),
     survivors AS (
       SELECT fingerprint, min(doc_id) AS doc_id FROM fps
-      WHERE fingerprint NOT IN (SELECT fingerprint FROM history)
+      WHERE NOT EXISTS (SELECT 1 FROM history h
+                        WHERE h.fingerprint = fps.fingerprint)
       GROUP BY fingerprint)
     SELECT b.doc_id, b.text FROM batch b
     WHERE b.doc_id IN (SELECT doc_id FROM survivors)
@@ -6337,7 +6342,7 @@ _stream_cusum_state_entry()
 def _dup_matrix_entry() -> None:
     from diagnosisextraction_ml_spark.operators import dedup as dedup_ops
 
-    sql = """
+    sql = f"""
     WITH corpus AS (
       SELECT doc_id, text, source FROM documents
       UNION ALL
@@ -6347,7 +6352,7 @@ def _dup_matrix_entry() -> None:
       SELECT doc_id + 2000000 AS doc_id, text, source
       FROM documents WHERE doc_id % 10 = 0
     ),
-    fp AS (SELECT md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS fp,
+    fp AS (SELECT md5({normalize_ws_sql('text')}) AS fp,
                   source AS src
            FROM corpus),
     per AS (SELECT fp, src, CAST(count(*) AS BIGINT) AS n FROM fp GROUP BY 1, 2),
@@ -7601,7 +7606,7 @@ def _winnow_entries() -> None:
     fps_cte = f"""
     norm AS (
       SELECT doc_id,
-             regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS s
+             {normalize_ws_sql('lower(text)')} AS s
       FROM documents),
     base AS (
       SELECT doc_id, s, len(s) - {k - 1} AS n_grams

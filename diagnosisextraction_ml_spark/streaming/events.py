@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from diagnosisextraction_ml_spark.functions.text import normalize_ws
 from diagnosisextraction_ml_spark.operators.textstats import quality_score
 
 
@@ -120,9 +121,7 @@ def streaming_dedup_exact(
     trade). Without: global ``dropDuplicates`` (unbounded state —
     bounded corpora only).
     """
-    fingerprinted = docs.withColumn(
-        "__fp", F.md5(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    )
+    fingerprinted = docs.withColumn("__fp", F.md5(normalize_ws(text_col)))
     if ts_col is not None:
         out = (
             _with_event_time(fingerprinted, ts_col)

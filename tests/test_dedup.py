@@ -348,6 +348,41 @@ def test_dedup_incremental_drops_null_ids(spark):
     assert got == {(5, "hello world"), (7, "fresh")}
 
 
+def test_dedup_incremental_null_text_twins_agree(spark, tmp_path):
+    """Null texts form one group (min id survives) and never match
+    history, on both engines — a null history fingerprint must not
+    empty the batch in the DuckDB twin."""
+    import duckdb
+
+    from diagnosisextraction_ml_spark.operators.dedup import dedup_incremental, index_fingerprints
+    from diagnosisextraction_ml_spark.plans.queries import oracle_sql, queries
+
+    history = index_fingerprints(
+        spark.createDataFrame([(10, None), (12, "y")], "doc_id long, text string")
+    )
+    batch = spark.createDataFrame(
+        [(3, None), (4, "y"), (5, "z")], "doc_id long, text string"
+    )
+    got = sorted(tuple(r) for r in dedup_incremental(batch, history).collect())
+    assert got == [(3, None), (5, "z")]
+
+    # The registry pair: history = even docs, batch = odd docs + every
+    # doc shifted by 1,000,000 — here the copy of 12 is the "y" repeat.
+    path = str(tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT * FROM (VALUES (10::BIGINT, NULL::VARCHAR), (12, 'y'), "
+        f"(3, NULL), (5, 'z')) t(doc_id, text)) TO '{path}' (FORMAT PARQUET)"
+    )
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    duck = sorted(con.execute(oracle_sql()["dedup_incremental_batch"]).fetchall())
+    spark_rows = sorted(
+        tuple(r) for r in queries()["dedup_incremental_batch"](spark, str(tmp_path)).collect()
+    )
+    assert spark_rows == [(3, None), (5, "z")]
+    assert duck == spark_rows
+
+
 def test_duplicated_gram_stats_hand_case(spark):
     from diagnosisextraction_ml_spark.operators.dedup import duplicated_gram_stats
 

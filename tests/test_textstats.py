@@ -441,6 +441,34 @@ def test_tokenizer_twins_agree_with_python_split(spark):
     assert got_duck == want
 
 
+def test_ws_normaliser_twins_agree(spark):
+    """normalize_ws (Java \\s), its DuckDB twin normalize_ws_sql (RE2)
+    and a Python model of Spark's trim + \\s+ collapse agree, vertical
+    tab included — a character the registry testdata never contains."""
+    import re
+
+    import duckdb
+
+    from diagnosisextraction_ml_spark.functions.text import normalize_ws, normalize_ws_sql
+
+    texts = [None, "", "  a  b ", "a\tb\nc", "a\x0bb", "x\x0cy"]
+    want = [
+        None if t is None else re.sub(r"[ \t\n\x0b\f\r]+", " ", t.strip(" "))
+        for t in texts
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    got_spark = [
+        r["n"] for r in df.select("i", normalize_ws("text").alias("n")).orderBy("i").collect()
+    ]
+    con = duckdb.connect()
+    got_duck = [
+        con.execute(f"SELECT {normalize_ws_sql('text')} FROM (SELECT ? AS text)", [t]).fetchone()[0]
+        for t in texts
+    ]
+    assert got_spark == want
+    assert got_duck == want
+
+
 def test_pack_token_stream_tiles_exactly(spark):
     """Concat-and-split invariants: every doc's segments cover exactly
     its tokens; every pack except each shard's last is exactly full;
