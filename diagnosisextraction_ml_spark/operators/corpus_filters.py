@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from diagnosisextraction_ml_spark.functions.stopwords import ENGLISH_STOPWORDS
 from diagnosisextraction_ml_spark.functions.text import tokenize_expr
 
 # Gopher Table A1 thresholds

@@ -40,7 +40,7 @@ absence as "unknown".
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.functions.hashing import md5_hash64

@@ -20,7 +20,7 @@ Scale design:
 - **The batch reduces before it meets the snapshot.** ``unionByName``
   feeds one aggregation, so a 10⁹-row batch against a 10¹²-row
   snapshot still shuffles each side exactly once on the key. With the
-  snapshot stored bucketed on the key (sources/bucketed.py) the
+  snapshot stored bucketed on the key (plans.queries._layout) the
   snapshot side's Exchange disappears entirely and only the batch
   moves.
 - **Determinism.** The struct compares ``order_cols`` first (newest

@@ -538,8 +538,8 @@ def _layout(
     once per :func:`_layout_name` and reused:
 
     - ``key``: bucketed (and sorted) by ``key`` — the pay-the-shuffle-
-      once layout (sources/bucketed.py). Every groupBy/join on ``key``
-      over the copy plans with NO Exchange on the fact side (Q18's
+      once layout. Every groupBy/join on ``key`` over the copy plans
+      with NO Exchange on the fact side (Q18's
       orderkey aggregate, Q17's partkey aggregate+probe, Q21's three
       orderkey legs, …).
     - ``part_col``: Hive-partitioned by the derived ``part_col`` — the

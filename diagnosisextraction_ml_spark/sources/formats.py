@@ -27,17 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def write_jsonl(df: DataFrame, path: str, compression: str | None = None) -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """Write one JSON object per line (Spark's native json sink).
 
     Each output task writes its partition independently — fully
-    parallel, no driver involvement. ``compression`` may be e.g.
-    ``gzip``/``zstd``; leave None for plain splittable text.
+    parallel, no driver involvement.
     """
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:

@@ -1,6 +1,6 @@
 """Hive-partitioned storage layout — partition pruning for time/category scans.
 
-The complement to the bucketed layout (sources/bucketed.py): bucketing
+The complement to the bucketed layout (plans.queries._layout): bucketing
 pre-pays the JOIN shuffle, directory partitioning pre-pays the SCAN.
 At 100 TB a fact table carrying a time column is stored partitioned by
 a coarse derivative of it (day, month) so that a query touching one
@@ -41,17 +41,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_partitioned_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Read a written layout. ``schema`` (when given, the fallback
-    DataFrame's schema) pins partition-value TYPES — Spark honors
-    user-schema types for partition columns, so ``yyyy-MM-dd`` stays a
-    string instead of inferring DATE — but Spark still APPENDS
+def read_partitioned_table(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Read a written layout. ``schema`` (the fallback DataFrame's
+    schema) pins partition-value TYPES — Spark honors user-schema
+    types for partition columns, so ``yyyy-MM-dd`` stays a string
+    instead of inferring DATE — but Spark still APPENDS
     partition columns regardless of their declared position, so the
     read is re-projected to the schema's field order (a pure Project;
     partition pruning under it is unaffected — the filter still binds
     to the partition attribute beneath)."""
-    if schema is None:
-        return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path).select(
         *[f.name for f in schema.fields]
     )

@@ -162,9 +162,6 @@ def write_training_shards(
     n_shards: int | None = None,
     target_rows_per_shard: int | None = None,
     fmt: str = "parquet",
-    sort_within: bool = True,
-    mode: str = "overwrite",
-    compression: str | None = None,
     qc_rules=None,
 ) -> int | tuple[int, dict]:
     """Deterministically sharded corpus sink for training-data exports.
@@ -181,14 +178,14 @@ def write_training_shards(
     - one ``repartition`` onto the shard id, then a directory-partition
       write (``shard=K/``) — exactly one file per shard, so downstream
       loaders get uniformly-sized, addressable shards;
-    - ``sort_within`` additionally sorts rows inside each shard by key
-      plus ALL remaining columns as tie-breaks, making file contents
-      byte-reproducible even when ``key_col`` has duplicates (a sort on
-      the key alone would leave the order among equal keys
-      engine-dependent). Columns whose types Spark cannot sort (maps)
-      are skipped as tie-breaks; if every row of a shard is fully
-      identical on the sortable columns, any residual order among those
-      duplicate rows is immaterial to content equality.
+    - rows inside each shard are sorted by key plus ALL remaining
+      columns as tie-breaks, making file contents byte-reproducible
+      even when ``key_col`` has duplicates (a sort on the key alone
+      would leave the order among equal keys engine-dependent).
+      Columns whose types Spark cannot sort (maps) are skipped as
+      tie-breaks; if every row of a shard is fully identical on the
+      sortable columns, any residual order among those duplicate rows
+      is immaterial to content equality.
 
     ``n_shards`` may be given directly, or derived from
     ``target_rows_per_shard`` (costs one count pass — at scale, pass
@@ -220,27 +217,22 @@ def write_training_shards(
         n_shards = max(1, -(-n // target_rows_per_shard))
     shard = (md5_hash64(F.col(key_col).cast("string")) % F.lit(n_shards)).cast("int")
     out = df.withColumn("shard", shard).repartition(n_shards, F.col("shard"))
-    if sort_within:
-        sortable = [
-            f.name
-            for f in df.schema.fields
-            if f.name != key_col and orderable(f.dataType)
-        ]
-        out = out.sortWithinPartitions("shard", key_col, *sortable)
+    sortable = [
+        f.name
+        for f in df.schema.fields
+        if f.name != key_col and orderable(f.dataType)
+    ]
+    out = out.sortWithinPartitions("shard", key_col, *sortable)
     obs = None
     if qc_rules is not None:
         from diagnosisextraction_ml_spark.operators.profile import observe_qc
 
         out, obs = observe_qc(out, qc_rules, name="shard_qc")
-    writer = out.write.mode(mode).partitionBy("shard")
-    if compression:
-        writer = writer.option("compression", compression)
+    writer = out.write.mode("overwrite").partitionBy("shard")
     if fmt == "parquet":
         writer.parquet(path)
     elif fmt == "json":
         writer.json(path)
-    elif fmt == "csv":
-        writer.option("header", True).csv(path)
     else:
         raise ValueError(f"unsupported fmt {fmt!r}")
     if obs is not None:

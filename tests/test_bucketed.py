@@ -5,25 +5,16 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from diagnosisextraction_ml_spark.sources.bucketed import write_bucketed_table
+from diagnosisextraction_ml_spark.plans.queries import _layout
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    write_bucketed_table(orders, "orders_b", "o_orderkey", n_buckets=8)
-    write_bucketed_table(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"), "lineitem_b", "o_orderkey", 8
-    )
-
-    a = spark.table("orders_b")
-    b = spark.table("lineitem_b")
-    joined = a.join(b, "o_orderkey").groupBy("o_orderkey").agg(
-        F.sum("l_quantity").alias("qty")
+    a = _layout(spark, sf_dir, "orders", "o_orderkey", n_buckets=8)
+    b = _layout(spark, sf_dir, "lineitem", "l_orderkey", n_buckets=8)
+    joined = (
+        a.join(b, a.o_orderkey == b.l_orderkey)
+        .groupBy("o_orderkey")
+        .agg(F.sum("l_quantity").alias("qty"))
     )
     # disable broadcast so the join strategy itself is what's tested
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -33,18 +24,16 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         assert "Exchange" not in plan  # co-located: no shuffle at all
         assert "SortMergeJoin" in plan
         # result parity with the plain (shuffled) join
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         plain = (
-            orders.join(
-                li.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
-            )
+            orders.join(li, orders.o_orderkey == li.l_orderkey)
             .groupBy("o_orderkey")
             .agg(F.sum("l_quantity").alias("qty"))
         )
         assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, plain.collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
 def test_q18_bucketed_agg_has_no_lineitem_shuffle(spark, sf_dir):
