@@ -20,6 +20,9 @@ Two curve shapes are provided:
   runs over |distinct scores| rows — the scalable default at 100 TB
   (a billion-row test set with float scores still collapses to at
   most a few million curve points, and the window input is tiny).
+  The cumulative sums are two-level (:func:`_bucketed_cumsum`):
+  bucket-partitioned windows plus offsets from one collect of at most
+  ``n_buckets`` totals, driver-sized by construction.
 
 AUC is provided as trapezoid-over-curve (exact parity with
 calculateAUC, src/NLP_functions.py:663-678) and as the rank-statistic
@@ -70,57 +73,44 @@ def _bucketed_cumsum(
     The classic two-level split: range-bucket the keys (bucket order =
     key order), cumsum *within* each bucket (``Window.partitionBy(
     bucket)`` — distributed), and add each bucket's offset = the sum of
-    all earlier buckets' totals. Offsets come from a conditioned
-    broadcast self-join of the ≤``n_buckets``-row totals table
-    (O(B²) comparisons of driver-free metadata — no collect, no
-    single-partition Exchange anywhere in the plan).
+    all earlier buckets' totals. The totals table has at most
+    ``n_buckets`` rows, driver-sized by construction, so it comes back
+    in one collect; offsets and grand totals are a sequential Python sum
+    over it, injected as one array literal per column (read with
+    ``element_at(offsets, __b + 1)``) and one ``__tot_<col>`` literal.
+    No single-partition Exchange anywhere in the plan.
 
     Exactness: the inputs here are counts (integer-valued doubles), so
     regrouping the additions cannot round — the two-level sums equal
     the sequential ones bit-for-bit below 2^53 rows.
 
-    ``sum_cols`` maps input column → output cumulative column. Global
-    totals ride along as ``__tot_<col>`` columns (from the same totals
-    table — no extra pass).
+    ``sum_cols`` maps input column → output cumulative column (offsets
+    are ``double``). Global totals ride along as ``__tot_<col>``
+    columns of ``sum(<col>)``'s type, null on empty input.
     """
     key = F.col(key_col)
     bucketed = per_key.withColumn(
         "__b", _range_bucket(key, n_buckets, *score_range, descending=descending)
     )
-    # localCheckpoint: the ≤n_buckets-row totals table feeds THREE
-    # consumers (offsets' probe side, its broadcast `earlier` side, and
-    # the grand-total broadcast). Left lazy, each consumer re-executed
-    # the whole per_key aggregation — the upstream relation was scanned
-    # 4× per cumsum (r15 plan audit on rel_pareto_share). Materializing
-    # a few-hundred-row table is free at any scale and cuts the
-    # upstream to the two passes the algorithm needs (totals + the
-    # windowed output itself).
-    totals = bucketed.groupBy("__b").agg(
-        *[F.sum(src).alias(f"__t_{src}") for src in sum_cols]
-    ).localCheckpoint()
-    earlier = totals.select(
-        F.col("__b").alias("__eb"),
-        *[F.col(f"__t_{src}").alias(f"__e_{src}") for src in sum_cols],
-    )
-    offsets = (
-        totals.join(F.broadcast(earlier), F.col("__eb") < F.col("__b"), "left")
-        .groupBy("__b")
-        .agg(
-            *[
-                F.coalesce(F.sum(f"__e_{src}"), F.lit(0.0)).alias(f"__off_{src}")
-                for src in sum_cols
-            ]
-        )
-    )
-    grand = totals.agg(
-        *[F.sum(f"__t_{src}").alias(f"__tot_{src}") for src in sum_cols]
-    )
+    totals = bucketed.groupBy("__b").agg(*[F.sum(src).alias(src) for src in sum_cols])
+    by_bucket = {row["__b"]: row for row in totals.collect()}
     order = key.desc() if descending else key.asc()
     w = Window.partitionBy("__b").orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
-    out = bucketed.join(F.broadcast(offsets), "__b").crossJoin(F.broadcast(grand))
+    grand, cums = {}, {}
     for src, dst in sum_cols.items():
-        out = out.withColumn(dst, F.sum(src).over(w) + F.col(f"__off_{src}"))
-    return out.drop("__b", *[f"__off_{src}" for src in sum_cols])
+        offsets, run = [], None
+        for b in range(n_buckets):
+            offsets.append(float(run or 0))
+            t = by_bucket[b][src] if b in by_bucket else None
+            if t is not None:
+                run = t if run is None else run + t
+        grand[f"__tot_{src}"] = F.lit(run).cast(totals.schema[src].dataType)
+        # One string literal split and cast in the JVM (folded to an array
+        # literal): a list or numpy literal costs a py4j call per element.
+        arr = F.split(F.lit(",".join(map(repr, offsets))), ",").cast("array<double>")
+        off = F.element_at(arr, F.col("__b") + 1)
+        cums[dst] = F.sum(src).over(w) + off
+    return bucketed.withColumns({**grand, **cums}).drop("__b")
 
 
 # --------------------------------------------------------------------------
@@ -182,13 +172,14 @@ def curve_by_threshold(
 
     groupBy(score) first (full map-side combine), then the cumulative
     TP/FP sums run as a *two-level* cumsum (:func:`_bucketed_cumsum`):
-    range-bucketed partition-local windows plus broadcast per-bucket
-    offsets. No global window — at 10⁹ distinct raw-double scores the
-    old ``Window.orderBy(score)`` funneled the whole curve through one
-    task; this plan keeps every stage partitioned. Semantics match
-    sklearn's ``roc_curve`` points (thresholds descending), and the
-    values are bit-identical to the sequential cumsum (counts sum
-    exactly in any order).
+    range-bucketed partition-local windows plus per-bucket offsets from
+    one collect of at most ``n_buckets`` totals. No global window — at
+    10⁹ distinct raw-double scores the old ``Window.orderBy(score)``
+    funneled the whole curve through one task; this plan keeps every
+    stage partitioned. Semantics match sklearn's ``roc_curve`` points
+    (thresholds descending), and the values are bit-identical to the
+    sequential cumsum (counts sum exactly in any order). The curve
+    comes back materialised, so its readers share one computation.
 
     ``score_range`` bounds only the bucket *balance* (defaults cover
     probabilities and the shifted scores used in tests); out-of-range
@@ -209,6 +200,9 @@ def curve_by_threshold(
     )
     n_pos = F.col("__tot_pos")
     n_neg = F.col("__tot_neg")
+    # localCheckpoint: the CV harness reads the curve three times (one
+    # collect, two PR trapezoids); left lazy, each read re-ran the score
+    # groupBy and the windows. The curve is ≤ |distinct scores| rows.
     return (
         out.withColumn("tpr", F.col("tp") / n_pos)
         .withColumn("fpr", F.col("fp") / n_neg)
@@ -221,6 +215,7 @@ def curve_by_threshold(
             ).otherwise(F.lit(0.0)),
         )
         .select("score", "tp", "fp", "tpr", "fpr", "precision", "f1")
+        .localCheckpoint()
     )
 
 

@@ -500,12 +500,13 @@ def stratified_sample_exact(
     serializes each stratum through ONE task — with few strata
     (languages, sources: the common case) that is exactly the
     single-partition funnel this repo bans. The rank here is two-level,
-    same doctrine as ``evaluate._bucketed_cumsum``: rows rank within
+    like ``evaluate._bucketed_cumsum``: rows rank within
     (stratum, hash-range bucket) — strata x n_buckets-way parallel —
     and each bucket adds an offset (count of earlier buckets in its
-    stratum) computed by a broadcast self-join of the tiny
-    per-(stratum, bucket) totals table. No collect, no
-    single-partition Exchange.
+    stratum) computed by a broadcast self-join of the per-(stratum,
+    bucket) totals table. That table has |strata| x n_buckets rows with
+    no fixed bound, so unlike the curve cumsum's ≤ n_buckets totals it
+    is not collected. No single-partition Exchange.
     """
     from pyspark.sql import Window
 

@@ -244,7 +244,8 @@ def interval_concurrency_daily(
 
     The running sum is a GLOBAL cumsum over time, exactly the shape
     the engine's two-level bucketed cumsum exists for (range-bucketed
-    partial cumsums + broadcast offsets — no single-task window).
+    partial cumsums + driver-computed bucket offsets — no single-task
+    window).
     ``range_lo_sec``/``range_hi_sec`` bound the timeline for the range
     bucketing (a production pipeline knows its partition's window; at
     100 TB you run this per day-partition and the "global" cumsum is

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from diagnosisextraction_ml_spark.operators.corpus_filters import (

@@ -9,10 +9,13 @@ resulting ROC-AUCs must match BASELINE.md.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
 from diagnosisextraction_ml_spark.operators.evaluate import (
+    _bucketed_cumsum,
     auc_rank,
     auc_trapezoid,
     classification_report,
@@ -355,3 +358,76 @@ def test_curve_metrics_pinned_to_independent_hand_computed_values(spark):
     max_f1 = curve.agg(F.max("f1").alias("m")).collect()[0]["m"]
     assert max_f1 == pytest.approx(10 / 13, abs=1e-12)
     curve.unpersist()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _spark_order_key(k, descending):
+    """Spark's sort position for a double key: nulls first ascending and
+    last descending, NaN greater than every number."""
+    if k is None:
+        return (0, 0.0) if not descending else (3, 0.0)
+    if math.isnan(k):
+        return (2, 0.0) if not descending else (0, 0.0)
+    return (1, k) if not descending else (1, -k)
+
+
+@pytest.mark.parametrize("descending", [True, False])
+def test_bucketed_cumsum_equals_sequential_python_cumsum(spark, descending):
+    """The two-level cumsum (bucket-local windows + driver-side bucket
+    offsets) equals a plain sequential cumsum exactly, over many
+    buckets, with keys outside score_range, a NaN key and a null key
+    (``greatest`` clamps null into the lowest bucket, so it keeps its
+    row)."""
+    import random
+
+    rnd = random.Random(11)
+    keys = sorted({round(rnd.uniform(-3.0, 13.0), 6) for _ in range(600)})
+    keys += [float("nan"), None]
+    rows = [(k, float(rnd.randint(0, 50)), rnd.randint(0, 9)) for k in keys]
+    df = spark.createDataFrame(rows, "k double, a double, c long")
+    out = _bucketed_cumsum(
+        df, "k", {"a": "cum_a", "c": "cum_c"}, descending, 64, (0.0, 10.0)
+    )
+
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("k", "double"), ("a", "double"), ("c", "bigint"),
+        ("__tot_a", "double"), ("__tot_c", "bigint"),
+        ("cum_a", "double"), ("cum_c", "double"),
+    ]
+    expected, run_a, run_c = {}, 0.0, 0
+    for k, a, c in sorted(rows, key=lambda r: _spark_order_key(r[0], descending)):
+        run_a, run_c = run_a + a, run_c + c
+        expected["null" if k is None else repr(k)] = (run_a, float(run_c))
+    got = {
+        "null" if r["k"] is None else repr(r["k"]): (r["cum_a"], r["cum_c"])
+        for r in out.collect()
+    }
+    assert got == expected
+    tots = out.select("__tot_a", "__tot_c").distinct().collect()
+    assert [tuple(t) for t in tots] == [(run_a, run_c)]
+
+    plan = _plan(out).replace(" ", "")
+    assert "windowspecdefinition(__b" in plan
+    assert plan.count("windowspecdefinition(") == plan.count("windowspecdefinition(__b")
+
+
+def test_bucketed_cumsum_empty_and_null_counts(spark):
+    """Empty input keeps the schema and yields no rows; counts that are
+    all null give a null ``__tot_<col>`` of ``sum(<col>)``'s type."""
+    from pyspark.sql import functions as F
+
+    schema = "k double, c long"
+    empty = _bucketed_cumsum(
+        spark.createDataFrame([], schema), "k", {"c": "cum"}, True, 16, (0.0, 1.0)
+    )
+    nulls = _bucketed_cumsum(
+        spark.createDataFrame([(0.5, None)], schema), "k", {"c": "cum"}, True, 16, (0.0, 1.0)
+    )
+    want = [("k", "double"), ("c", "bigint"), ("__tot_c", "bigint"), ("cum", "double")]
+    assert empty.dtypes == nulls.dtypes == want
+    assert empty.collect() == []
+    assert empty.agg(F.max("__tot_c")).collect()[0][0] is None
+    assert [tuple(r) for r in nulls.collect()] == [(0.5, None, None, None)]

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import math
 
-import pyspark.sql.functions as F
 import pytest
 
 from diagnosisextraction_ml_spark.functions.stats import t_sf, ttest_5x2cv

@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-import pytest
-
 from diagnosisextraction_ml_spark.functions.mojibake import (
     MOJIBAKE_MAP,
     fix_mojibake,

@@ -4,7 +4,6 @@ no cartesian products, windows are partitioned."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from diagnosisextraction_ml_spark.plans.queries import queries
@@ -196,11 +195,25 @@ def test_q8_market_filter_upstream_of_big_join(spark, sf_dir, qs):
     assert big.start() < semi, "customer semi-filter planned above the big join"
 
 
-def test_curve_engine_plan_shape(spark, sf_dir, qs):
-    """The curve cumsum must run as bucket-partitioned windows plus
-    broadcast offset joins — never a global sort-window."""
-    for name in ["eval_curve_by_threshold", "eval_auc_rank"]:
-        plan = _plan(qs[name](spark, sf_dir))
+def test_curve_engine_plan_shape(spark, sf_dir, qs, monkeypatch):
+    """The curve cumsum must run as bucket-partitioned windows — never
+    a global sort-window. curve_by_threshold returns its curve
+    materialised, so that plan is the relation it checkpoints."""
+    cls = type(spark.range(1))
+    checkpointed = []
+    real = cls.localCheckpoint
+
+    def record(self, *args, **kwargs):
+        checkpointed.append(_plan(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", record)
+    qs["eval_curve_by_threshold"](spark, sf_dir)
+    plans = {
+        "eval_curve_by_threshold": checkpointed[-1],
+        "eval_auc_rank": _plan(qs["eval_auc_rank"](spark, sf_dir)),
+    }
+    for name, plan in plans.items():
         assert "windowspecdefinition(__b" in plan.replace(" ", ""), name
         assert not _unpartitioned_windows(plan), name
 
@@ -407,7 +420,6 @@ def test_plan_fingerprints_unchanged(spark, sf_dir, qs, all_plans):
     regenerate with `python tools/plan_fingerprints.py` and commit the
     diff alongside the code."""
     import json
-    import os
 
     from tools.plan_fingerprints import FINGERPRINT_FILE, fingerprint
 

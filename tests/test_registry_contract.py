@@ -5,7 +5,6 @@ real views, and the spotlight must reference real queries."""
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from diagnosisextraction_ml_spark.plans.queries import (
     DRIVER_SPOTLIGHT,

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import math
 
-import pyspark.sql.functions as F
 import pytest
 
 from diagnosisextraction_ml_spark.operators import search

@@ -89,8 +89,6 @@ def test_windowed_counts_on_ntz_stream(spark, sf_dir, tmp_path):
 
 
 def test_streaming_quality_filter(spark, tmp_path):
-    import pandas as pd
-
     docs = spark.createDataFrame(
         [(1, "the quick brown fox and the lazy dog jumped over it all day"), (2, "!!")],
         "doc_id long, text string",

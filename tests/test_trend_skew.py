@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from diagnosisextraction_ml_spark.operators.profile import key_skew_profile
 from diagnosisextraction_ml_spark.operators.rollup import grouped_ols_trend
 

@@ -7,8 +7,6 @@ first-argmin tie-break.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from diagnosisextraction_ml_spark.functions.typo import (
     correct_token,
     correct_typos,

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pyspark.sql.functions as F
 import pytest
 
 from diagnosisextraction_ml_spark.operators.upsert import upsert_latest
