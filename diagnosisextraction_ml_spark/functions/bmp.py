@@ -23,6 +23,8 @@ import struct
 
 import numpy as np
 
+from diagnosisextraction_ml_spark.functions.png import image_features
+
 _MAGIC = b"BM"
 _BI_RGB = 0
 
@@ -96,22 +98,5 @@ def encode_bmp(arr: np.ndarray) -> bytes:
 
 def bmp_feature_decoder(payload: bytes, dim: int = 8) -> np.ndarray:
     """Real-decode feature hook for ``multimodal.extract_features``:
-    same fixed-width vector convention as ``png_feature_decoder`` —
-    [w, h, channels, mean, std, min, max, first-channel mean] with
-    pixel stats normalized to [0, 1]."""
-    img = decode_bmp(payload).astype(np.float64)
-    h, w, ch = img.shape
-    px = img / 255.0
-    feats = np.array(
-        [
-            float(w),
-            float(h),
-            float(ch),
-            float(px.mean()),
-            float(px.std()),
-            float(px.min()),
-            float(px.max()),
-            float(px[:, :, 0].mean()),
-        ]
-    )
-    return feats[:dim]
+    decode the BMP and emit :func:`image_features`."""
+    return image_features(decode_bmp(payload), dim)

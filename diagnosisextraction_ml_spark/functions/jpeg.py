@@ -36,6 +36,8 @@ import struct
 
 import numpy as np
 
+from diagnosisextraction_ml_spark.functions.png import image_features
+
 # -- spec constants ---------------------------------------------------------
 
 # Zigzag scan: position in the 64-coefficient scan order → natural
@@ -580,20 +582,5 @@ def encode_jpeg(arr: np.ndarray, quality: int = 85) -> bytes:
 
 def jpeg_feature_decoder(payload: bytes, dim: int = 8) -> np.ndarray:
     """Real-decode feature hook for ``multimodal.extract_features``:
-    same fixed-width vector convention as the PNG/BMP hooks."""
-    img = decode_jpeg(payload).astype(np.float64)
-    h, w, ch = img.shape
-    px = img / 255.0
-    feats = np.array(
-        [
-            float(w),
-            float(h),
-            float(ch),
-            float(px.mean()),
-            float(px.std()),
-            float(px.min()),
-            float(px.max()),
-            float(px[:, :, 0].mean()),
-        ]
-    )
-    return feats[:dim]
+    decode the JPEG and emit :func:`image_features`."""
+    return image_features(decode_jpeg(payload), dim)

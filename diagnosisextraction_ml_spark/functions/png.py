@@ -132,14 +132,13 @@ def encode_png(arr: np.ndarray) -> bytes:
     )
 
 
-def png_feature_decoder(payload: bytes, dim: int = 8) -> np.ndarray:
-    """Real-decode feature hook for ``multimodal.extract_features``:
-    decode the PNG and emit a fixed-width deterministic feature vector
-    [w, h, channels, mean, std, min, max, first-channel mean] (pixel
-    stats normalized to [0, 1])."""
-    img = decode_png(payload).astype(np.float64)
+def image_features(img: np.ndarray, dim: int) -> np.ndarray:
+    """The fixed-width feature vector of a decoded (h, w, ch) uint8
+    image: [w, h, channels, mean, std, min, max, first-channel mean],
+    pixel stats normalized to [0, 1], truncated to ``dim``. Shared by
+    the PNG, BMP and JPEG feature hooks."""
     h, w, ch = img.shape
-    px = img / 255.0
+    px = img.astype(np.float64) / 255.0
     feats = np.array(
         [
             float(w),
@@ -153,3 +152,9 @@ def png_feature_decoder(payload: bytes, dim: int = 8) -> np.ndarray:
         ]
     )
     return feats[:dim]
+
+
+def png_feature_decoder(payload: bytes, dim: int = 8) -> np.ndarray:
+    """Real-decode feature hook for ``multimodal.extract_features``:
+    decode the PNG and emit :func:`image_features`."""
+    return image_features(decode_png(payload), dim)

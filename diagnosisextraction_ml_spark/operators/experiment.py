@@ -81,6 +81,33 @@ def two_proportion_test(
     )
 
 
+def two_proportion_test_sql(ctes: str) -> str:
+    """DuckDB twin of :func:`two_proportion_test`. ``ctes`` is the body
+    of a WITH list whose last relation ``u`` has one row per unit with
+    columns (arm, converted); the same exact-rational inequality runs
+    on HUGEINT counts."""
+    return f"""
+    WITH {ctes},
+    agg AS (
+      SELECT
+        CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n_0,
+        CAST(sum(CASE WHEN arm = 0 AND converted = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS x_0,
+        CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n_1,
+        CAST(sum(CASE WHEN arm = 1 AND converted = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS x_1
+      FROM u
+    )
+    SELECT CAST(n_0 AS BIGINT) AS n_0, CAST(x_0 AS BIGINT) AS x_0,
+           CAST(n_1 AS BIGINT) AS n_1, CAST(x_1 AS BIGINT) AS x_1,
+           CAST(CASE WHEN (x_1 * n_0 - x_0 * n_1) < 0 THEN -1 ELSE 1 END
+                * ((1000000 * abs(x_1 * n_0 - x_0 * n_1)) // (n_0 * n_1))
+                AS BIGINT) AS diff_micro,
+           ({_Z2_DEN} * (n_0 + n_1) * (x_1 * n_0 - x_0 * n_1) * (x_1 * n_0 - x_0 * n_1))
+             > ({_Z2_NUM} * (x_0 + x_1) * ((n_0 + n_1) - (x_0 + x_1)) * (n_0 * n_1))
+             AS significant
+    FROM agg
+    """
+
+
 def kaplan_meier(
     df: DataFrame,
     duration_col: str,

@@ -16,6 +16,10 @@ determinism*:
 - top-k queries carry a total tie-break order.
 
 Column names are aliased identically in both implementations.
+
+A layout variant (``*_bucketed``, ``*_pruned``) is the plain query's
+SQL twin and Spark body registered again with its fact tables read
+from :func:`_layout`; only the physical layer differs.
 """
 
 from __future__ import annotations
@@ -35,6 +39,8 @@ _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
 
 def register(name: str, sql: str | None):
     def deco(fn: QueryFn) -> QueryFn:
+        if name in _REGISTRY:
+            raise ValueError(f"query {name!r} is already registered")
         _REGISTRY[name] = (fn, sql)
         return fn
 
@@ -214,9 +220,7 @@ def rel_q1_pricing(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q3_topk",
-    """
+_Q3_SQL = """
     SELECT o.o_orderkey,
            CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
            o.o_orderdate
@@ -226,57 +230,24 @@ def rel_q1_pricing(spark, sf_dir):
     GROUP BY o.o_orderkey, o.o_orderdate
     ORDER BY revenue DESC, o_orderkey ASC
     LIMIT 10
-    """,
-)
-def rel_q3_topk(spark, sf_dir):
+    """
+
+
+def _q3(spark, sf_dir, o, li):
     """TPC-H Q3 shape — dim-filtered join + agg + deterministic top-k.
 
     The customer side is small after the segment filter → explicit
     broadcast hint; lineitem⋈orders is the real shuffle and AQE keeps
     it healthy under skew.
-    """
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    disc = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(F.sum(disc).cast("double").alias("revenue"))
-        .select("o_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
 
-
-@register(
-    "rel_q3_topk_bucketed",
-    """
-    SELECT o.o_orderkey,
-           CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-           o.o_orderdate
-    FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-                    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-    GROUP BY o.o_orderkey, o.o_orderdate
-    ORDER BY revenue DESC, o_orderkey ASC
-    LIMIT 10
-    """,
-)
-def rel_q3_topk_bucketed(spark, sf_dir):
-    """Q3 over the co-bucketed orderkey layouts: lineitem⋈orders — the
-    only big⋈big join in Q3 — reads the two o/l_orderkey-bucketed
-    copies already amortized by Q18/Q21/Q8, so the join AND the
+    ``rel_q3_topk_bucketed`` reads the co-bucketed orderkey layouts
+    (:func:`_layout`) already amortized by Q18/Q21/Q8: the join AND the
     (o_orderkey, o_orderdate) aggregate above it (hash partitioning on
     the bucket key satisfies the superset grouping's clustering) run
     with zero fact-side Exchange (plan-asserted in
-    tests/test_bucketed.py). Customer stays an explicit broadcast;
-    top-k stays TakeOrderedAndProject. Semantics and oracle identical
-    to :func:`rel_q3_topk`."""
+    tests/test_bucketed.py).
+    """
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _layout(spark, sf_dir, "orders", "o_orderkey")
-    li = _layout(spark, sf_dir, "lineitem", "l_orderkey")
     disc = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
@@ -289,9 +260,22 @@ def rel_q3_topk_bucketed(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q4_priority_exists_bucketed",
-    """
+# Bound at module level too: __spark_entry__.entry runs it directly.
+rel_q3_topk = register("rel_q3_topk", _Q3_SQL)(
+    lambda spark, sf_dir: _q3(
+        spark, sf_dir, _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
+    )
+)
+register("rel_q3_topk_bucketed", _Q3_SQL)(
+    lambda spark, sf_dir: _q3(
+        spark, sf_dir,
+        _layout(spark, sf_dir, "orders", "o_orderkey"),
+        _layout(spark, sf_dir, "lineitem", "l_orderkey"),
+    )
+)
+
+
+_Q4_SQL = """
     SELECT o.o_orderpriority, count(*) AS order_count
     FROM orders o
     WHERE o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -299,26 +283,43 @@ def rel_q3_topk_bucketed(spark, sf_dir):
       AND EXISTS (SELECT 1 FROM lineitem l
                   WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
     GROUP BY o.o_orderpriority
-    """,
-)
-def rel_q4_priority_exists_bucketed(spark, sf_dir):
-    """Q4 over the co-bucketed orderkey layouts: the EXISTS semi join
-    — Q4's only fact⋈fact edge — reads both bucketed copies, so the
-    semi runs bucket-local with zero orderkey Exchange (plan-asserted);
-    the date and quantity predicates still push to the bucketed scans
-    as ordinary data filters (bucketing and pushdown compose). Only
-    the metadata-sized priority rollup shuffles. Semantics and oracle
-    identical to :func:`rel_q4_priority_exists`."""
-    o = _layout(spark, sf_dir, "orders", "o_orderkey").filter(
+    """
+
+
+def _q4(o, li):
+    """TPC-H Q4 shape — EXISTS-driven priority count: a LEFT SEMI join
+    (each order matches at most once however many lineitems qualify)
+    feeding a small aggregate.
+
+    The quantity predicate prunes lineitem at its scan and the date
+    window prunes orders at its scan BEFORE the semi join — the
+    exchange carries only the two reduced key sets; the priority
+    rollup is metadata-sized.
+
+    ``rel_q4_priority_exists_bucketed`` reads both co-bucketed
+    orderkey layouts, so the semi join — Q4's only fact⋈fact edge —
+    runs bucket-local with zero orderkey Exchange (plan-asserted); the
+    date and quantity predicates still push to the bucketed scans as
+    ordinary data filters (bucketing and pushdown compose).
+    """
+    o = o.filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
-    li = _layout(spark, sf_dir, "lineitem", "l_orderkey").filter(F.col("l_quantity") > 45)
+    li = li.filter(F.col("l_quantity") > 45)
     return (
         o.join(li, o["o_orderkey"] == li["l_orderkey"], "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
     )
+
+
+register("rel_q4_priority_exists_bucketed", _Q4_SQL)(
+    lambda spark, sf_dir: _q4(
+        _layout(spark, sf_dir, "orders", "o_orderkey"),
+        _layout(spark, sf_dir, "lineitem", "l_orderkey"),
+    )
+)
 
 
 @register(
@@ -411,9 +412,7 @@ def rel_q5_region_revenue(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q18_big_orders",
-    """
+_Q18_SQL = """
     WITH big AS (
       SELECT l_orderkey,
              CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
@@ -427,9 +426,10 @@ def rel_q5_region_revenue(spark, sf_dir):
       JOIN customer c ON c.c_custkey = o.o_custkey
     ORDER BY o.o_totalprice DESC, o.o_orderkey ASC
     LIMIT 20
-    """,
-)
-def rel_q18_big_orders(spark, sf_dir):
+    """
+
+
+def _q18(spark, sf_dir, li, o):
     """TPC-H Q18 shape — large-volume customers: a HAVING-filtered
     aggregate used as the driving (semi-reducing) side of a join chain.
 
@@ -439,9 +439,15 @@ def rel_q18_big_orders(spark, sf_dir):
     the aggregate produced (no re-shuffle of the aggregate side under
     AQE), customer attaches last when rows are fewest, and the top-k is
     a TakeOrderedAndProject, never a global sort.
+
+    ``rel_q18_big_orders_bucketed`` reads the orderkey-bucketed
+    lineitem and orders layouts (:func:`_layout`): the full-fact
+    groupBy(l_orderkey) — Q18's whole cost at scale (the 8.3×/decade
+    driver in PERF.md's sf10 map) — aggregates with ZERO shuffle of
+    lineitem, and the big⋈orders join is bucket-local on BOTH sides
+    (zero orderkey Exchange anywhere, asserted in
+    tests/test_bucketed.py).
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
@@ -459,6 +465,13 @@ def rel_q18_big_orders(spark, sf_dir):
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(20)
     )
+
+
+register("rel_q18_big_orders", _Q18_SQL)(
+    lambda spark, sf_dir: _q18(
+        spark, sf_dir, _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
+    )
+)
 
 
 def _bucketed_base_dir() -> str:
@@ -640,53 +653,13 @@ def _layout(
         return plain
 
 
-@register(
-    "rel_q18_big_orders_bucketed",
-    """
-    WITH big AS (
-      SELECT l_orderkey,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-      FROM lineitem
-      GROUP BY l_orderkey
-      HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 150)
-    SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-           o.o_totalprice, big.sum_qty
-    FROM big
-      JOIN orders o ON o.o_orderkey = big.l_orderkey
-      JOIN customer c ON c.c_custkey = o.o_custkey
-    ORDER BY o.o_totalprice DESC, o.o_orderkey ASC
-    LIMIT 20
-    """,
+register("rel_q18_big_orders_bucketed", _Q18_SQL)(
+    lambda spark, sf_dir: _q18(
+        spark, sf_dir,
+        _layout(spark, sf_dir, "lineitem", "l_orderkey"),
+        _layout(spark, sf_dir, "orders", "o_orderkey"),
+    )
 )
-def rel_q18_big_orders_bucketed(spark, sf_dir):
-    """Q18 over the bucketed-by-orderkey lineitem layout: identical
-    semantics to rel_q18_big_orders, but the full-fact
-    groupBy(l_orderkey) — Q18's whole cost at scale (the 8.3×/decade
-    driver in PERF.md's sf10 map) — reads pre-hash-partitioned buckets
-    and aggregates with ZERO shuffle of lineitem, and orders reads the
-    o_orderkey-bucketed copy already amortized by Q21, so the
-    big⋈orders join is bucket-local on BOTH sides (zero orderkey
-    Exchange anywhere, asserted in tests/test_bucketed.py). Customer
-    attaches last, top-k stays TakeOrderedAndProject."""
-    o = _layout(spark, sf_dir, "orders", "o_orderkey")
-    c = _t(spark, sf_dir, "customer")
-    li = _layout(spark, sf_dir, "lineitem", "l_orderkey")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("__sq"))
-        .filter(F.col("__sq") > 150)
-        .select("l_orderkey", F.col("__sq").cast("double").alias("sum_qty"))
-    )
-    return (
-        big.join(o, big["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .select(
-            "c_name", "c_custkey", "o_orderkey", "o_orderdate",
-            "o_totalprice", "sum_qty",
-        )
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(20)
-    )
 
 
 @register(
@@ -854,9 +827,7 @@ def rel_q19_or_predicates(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q12_priority_lines",
-    """
+_Q12_SQL = """
     SELECT l.l_linestatus,
            CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
                          THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -866,9 +837,10 @@ def rel_q19_or_predicates(spark, sf_dir):
     WHERE l.l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY l.l_linestatus
-    """,
-)
-def rel_q12_priority_lines(spark, sf_dir):
+    """
+
+
+def _q12(li, o):
     """TPC-H Q12 shape — conditional aggregation: one pass computes
     both CASE-gated counts instead of two filtered subqueries (the
     pivot-lite pattern every reporting layer leans on).
@@ -877,9 +849,24 @@ def rel_q12_priority_lines(spark, sf_dir):
     sides on orderkey (one shuffle); the CASE branches are pure
     projections inside the partial aggregate, so the exchange carries
     only (linestatus, 2 longs) per map task.
+
+    ``rel_q12_priority_lines_bucketed_pruned`` reads the COMBINED
+    layout (:func:`_layout` with key and part_col — lineitem
+    partitioned by ship month AND bucketed by orderkey), pre-filtered
+    to the window's months: the year prunes to 12 of ~83 month
+    directories at listing time, and the join against the
+    o_orderkey-bucketed orders copy runs bucket-local — zero orderkey
+    Exchange plus PartitionFilters, plan-asserted in
+    tests/test_partitioned.py. Q12 is the query shape that wants both:
+    a time window on the fact and a key join to another fact. This
+    layout needs ≥~100 MB per (partition, bucket) cell to win and
+    measurably LOSES 2.1× at sf10 (PERF.md) — the decision rule is
+    codified in sources/advisor.py (``advise_layout`` returns
+    regime='loss' for exactly this table at local scale and 'win' at
+    the 100 TB shape); kept registered because the plan mechanics are
+    what transfer to the cluster.
     """
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = li.filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
@@ -894,59 +881,22 @@ def rel_q12_priority_lines(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q12_priority_lines_bucketed_pruned",
-    """
-    SELECT l.l_linestatus,
-           CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE l.l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY l.l_linestatus
-    """,
+register("rel_q12_priority_lines", _Q12_SQL)(
+    lambda spark, sf_dir: _q12(
+        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
+    )
 )
-def rel_q12_priority_lines_bucketed_pruned(spark, sf_dir):
-    """Q12 over the COMBINED layout (:func:`_layout` with key and
-    part_col — lineitem partitioned by ship month AND bucketed by orderkey):
-    the one-year window prunes to 12 of ~83 month directories at
-    listing time, and the join against the o_orderkey-bucketed orders
-    copy runs bucket-local — both levers in one plan, zero orderkey
-    Exchange plus PartitionFilters, plan-asserted in
-    tests/test_partitioned.py. Q12 is the query shape that wants both:
-    a time window on the fact and a key join to another fact. Exact
-    shipdate predicates are kept; semantics and oracle identical to
-    :func:`rel_q12_priority_lines`.
-
-    Sizing: this layout needs ≥~100 MB per (partition, bucket) cell to
-    win and measurably LOSES 2.1× at sf10 (PERF.md) — the decision
-    rule is codified in sources/advisor.py (``advise_layout`` returns
-    regime='loss' for exactly this table at local scale and 'win' at
-    the 100 TB shape); kept registered because the plan mechanics are
-    what transfer to the cluster."""
-    li = _layout(spark, sf_dir, "lineitem", "l_orderkey", "l_shipmonth").filter(
-        (F.col("l_shipmonth") >= "1997-01")
-        & (F.col("l_shipmonth") <= "1997-12")
-        & (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+register("rel_q12_priority_lines_bucketed_pruned", _Q12_SQL)(
+    lambda spark, sf_dir: _q12(
+        _layout(spark, sf_dir, "lineitem", "l_orderkey", "l_shipmonth").filter(
+            (F.col("l_shipmonth") >= "1997-01") & (F.col("l_shipmonth") <= "1997-12")
+        ),
+        _layout(spark, sf_dir, "orders", "o_orderkey"),
     )
-    o = _layout(spark, sf_dir, "orders", "o_orderkey")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
+)
 
 
-@register(
-    "rel_q6_forecast_revenue",
-    """
+_Q6_SQL = """
     SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
            count(*) AS n_items
     FROM lineitem
@@ -954,17 +904,28 @@ def rel_q12_priority_lines_bucketed_pruned(spark, sf_dir):
       AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
-    """,
-)
-def rel_q6_forecast_revenue(spark, sf_dir):
+    """
+
+
+def _q6(li):
     """TPC-H Q6 shape — forecasting revenue change: the pure
     scan-predicate aggregate that measures nothing but pushdown and
     codegen. All three predicates land in PushedFilters, the scan
     reads 4 columns, and the whole query is one WholeStageCodegen span
     ending in a single-row partial+final aggregate — the plan every
     other query's scan stage should look like.
+
+    ``rel_q6_revenue_pruned`` reads a ship-MONTH-partitioned lineitem
+    layout (:func:`_layout`) pre-filtered to the year's months, so the
+    scan prunes at directory-listing time — only the 12 matching month
+    directories of the ~83 on disk are listed, opened, or decoded
+    (``PartitionFilters`` asserted in tests/test_partitioned.py). At
+    100 TB this is the difference between scanning 100 TB and scanning
+    14 TB before the first row filter runs. The month bounds are
+    IMPLIED by the exact shipdate predicates (same session timezone
+    derives both), which stay in PushedFilters unchanged — the layout
+    can only skip data the exact predicates would reject.
     """
-    li = _t(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -983,50 +944,16 @@ def rel_q6_forecast_revenue(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q6_revenue_pruned",
-    """
-    SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-           count(*) AS n_items
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
+register("rel_q6_forecast_revenue", _Q6_SQL)(
+    lambda spark, sf_dir: _q6(_t(spark, sf_dir, "lineitem"))
 )
-def rel_q6_revenue_pruned(spark, sf_dir):
-    """Q6 over a ship-MONTH-partitioned lineitem layout
-    (:func:`_layout`): identical semantics and oracle to
-    :func:`rel_q6_forecast_revenue`, but the one-year predicate also
-    lands on the derived ``l_shipmonth`` partition column, so the scan
-    prunes at directory-listing time — only the 12 matching month
-    directories of the ~83 on disk are listed, opened, or decoded
-    (``PartitionFilters`` asserted in tests/test_partitioned.py). At
-    100 TB this is the difference between scanning 100 TB and scanning
-    14 TB before the first row filter runs. The month bounds are
-    IMPLIED by the exact shipdate predicates (same session timezone
-    derives both), which stay in PushedFilters unchanged — the layout
-    can only skip data the exact predicates would reject."""
-    li = _layout(spark, sf_dir, "lineitem", part_col="l_shipmonth")
-    return (
-        li.filter(
-            (F.col("l_shipmonth") >= "1997-01")
-            & (F.col("l_shipmonth") <= "1997-12")
-            & (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,4)")
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count("*").alias("n_items"),
+register("rel_q6_revenue_pruned", _Q6_SQL)(
+    lambda spark, sf_dir: _q6(
+        _layout(spark, sf_dir, "lineitem", part_col="l_shipmonth").filter(
+            (F.col("l_shipmonth") >= "1997-01") & (F.col("l_shipmonth") <= "1997-12")
         )
     )
+)
 
 
 @register(
@@ -1087,7 +1014,7 @@ def events_week_stats_pruned(spark, sf_dir):
 def rel_revenue_dpp_months(spark, sf_dir):
     """Shipping revenue in the months that saw a near-ceiling-priced
     order — DYNAMIC partition pruning over the month-partitioned
-    lineitem layout. Unlike :func:`rel_q6_revenue_pruned` the pruning
+    lineitem layout. Unlike the ``rel_q6_revenue_pruned`` entry the pruning
     predicate is not knowable statically: the qualifying months come
     out of a runtime aggregate over orders. Spark plans the dim side
     as a broadcast, then REUSES the broadcast result as a
@@ -1198,43 +1125,14 @@ def rel_q14_promo_share(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q4_priority_exists",
-    """
-    SELECT o.o_orderpriority, count(*) AS order_count
-    FROM orders o
-    WHERE o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1997-04-01 00:00:00'
-      AND EXISTS (SELECT 1 FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-    GROUP BY o.o_orderpriority
-    """,
+register("rel_q4_priority_exists", _Q4_SQL)(
+    lambda spark, sf_dir: _q4(
+        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
+    )
 )
-def rel_q4_priority_exists(spark, sf_dir):
-    """TPC-H Q4 shape — EXISTS-driven priority count: a LEFT SEMI join
-    (each order matches at most once however many lineitems qualify)
-    feeding a small aggregate.
-
-    The quantity predicate prunes lineitem at its scan and the date
-    window prunes orders at its scan BEFORE the semi join — the
-    exchange carries only the two reduced key sets; the priority
-    rollup is metadata-sized.
-    """
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
-    return (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"], "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
 
 
-@register(
-    "rel_q8_market_share",
-    """
+_Q8_SQL = """
     WITH flow AS (
       SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS o_year,
              sn.n_name AS supp_nation,
@@ -1253,9 +1151,10 @@ def rel_q4_priority_exists(spark, sf_dir):
            CAST(sum(volume) AS DOUBLE) AS total_volume
     FROM flow
     GROUP BY o_year
-    """,
-)
-def rel_q8_market_share(spark, sf_dir):
+    """
+
+
+def _q8(spark, sf_dir, li):
     """TPC-H Q8 shape — national market share: one nation's fraction of
     a region's order volume per year (two roles for the nation dim —
     customer side filters the market, supplier side tags the share).
@@ -1269,8 +1168,15 @@ def rel_q8_market_share(spark, sf_dir):
     The share is a conditional aggregate over one pass — no self-join,
     no second scan. Ratios divide as DOUBLE only after DECIMAL-exact
     sums.
+
+    ``rel_q8_market_share_bucketed`` reads the orderkey-bucketed
+    lineitem (:func:`_layout`), so the big join's FACT side never
+    exchanges: the reduced orders shuffle to the bucket partitioning
+    and the join runs bucket-local. The plan that is right at 100 TB
+    (no customer broadcast assumed) is then also the locally fastest:
+    the 60M-row exchange that the layout removes was the whole cost of
+    the join-order trade measured in PERF.md Round 12.
     """
-    li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     s = _t(spark, sf_dir, "supplier")
@@ -1307,74 +1213,14 @@ def rel_q8_market_share(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q8_market_share_bucketed",
-    """
-    WITH flow AS (
-      SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS o_year,
-             sn.n_name AS supp_nation,
-             CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4)) AS volume
-      FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        JOIN region r ON cn.n_regionkey = r.r_regionkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-      WHERE r.r_name = 'ASIA')
-    SELECT o_year,
-           CAST(sum(CASE WHEN supp_nation = 'CHINA' THEN volume ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
-             / CAST(sum(volume) AS DOUBLE) AS mkt_share,
-           CAST(sum(volume) AS DOUBLE) AS total_volume
-    FROM flow
-    GROUP BY o_year
-    """,
+register("rel_q8_market_share", _Q8_SQL)(
+    lambda spark, sf_dir: _q8(spark, sf_dir, _t(spark, sf_dir, "lineitem"))
 )
-def rel_q8_market_share_bucketed(spark, sf_dir):
-    """Q8 over the bucketed-by-orderkey lineitem: the market-filter-
-    first shape of :func:`rel_q8_market_share` (semi-reduce orders by
-    ASIA customers upstream), with the big join's FACT side reading
-    pre-hash-partitioned buckets — lineitem never exchanges at all.
-    The reduced orders shuffle to the bucket partitioning and the join
-    runs bucket-local, so the plan that is right at 100 TB (no
-    customer broadcast assumed) is also the locally fastest: the
-    60M-row exchange that the layout removes was the whole cost of
-    the join-order trade measured in PERF.md Round 12."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    cn = _t(spark, sf_dir, "nation").alias("cn")
-    sn = _t(spark, sf_dir, "nation").alias("sn")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    li = _layout(spark, sf_dir, "lineitem", "l_orderkey")
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    cust_asia = (
-        c.join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn.n_nationkey"))
-        .join(F.broadcast(r), F.col("cn.n_regionkey") == F.col("r_regionkey"))
-        .select("c_custkey")
+register("rel_q8_market_share_bucketed", _Q8_SQL)(
+    lambda spark, sf_dir: _q8(
+        spark, sf_dir, _layout(spark, sf_dir, "lineitem", "l_orderkey")
     )
-    o_asia = o.join(
-        cust_asia, o["o_custkey"] == cust_asia["c_custkey"], "left_semi"
-    ).select("o_orderkey", "o_orderdate")
-    flow = (
-        li.join(o_asia, li["l_orderkey"] == o_asia["o_orderkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn.n_nationkey"))
-        .select(
-            F.year("o_orderdate").alias("o_year"),
-            F.col("sn.n_name").alias("supp_nation"),
-            vol.alias("volume"),
-        )
-    )
-    share_num = F.sum(
-        F.when(F.col("supp_nation") == "CHINA", F.col("volume")).otherwise(
-            F.lit(0).cast("decimal(18,4)")
-        )
-    ).cast("double")
-    return flow.groupBy("o_year").agg(
-        (share_num / F.sum("volume").cast("double")).alias("mkt_share"),
-        F.sum("volume").cast("double").alias("total_volume"),
-    )
+)
 
 
 @register(
@@ -1547,9 +1393,7 @@ def rel_q16_supplier_variety(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q17_small_qty_revenue",
-    """
+_Q17_SQL = """
     WITH avg_qty AS (
       SELECT l_partkey, 0.5 * avg(l_quantity) AS half_avg
       FROM lineitem GROUP BY l_partkey)
@@ -1560,9 +1404,10 @@ def rel_q16_supplier_variety(spark, sf_dir):
       JOIN part p ON l.l_partkey = p.p_partkey
       JOIN avg_qty a ON a.l_partkey = l.l_partkey
     WHERE p.p_brand = 'Brand#2' AND l.l_quantity < a.half_avg
-    """,
-)
-def rel_q17_small_qty_revenue(spark, sf_dir):
+    """
+
+
+def _q17(spark, sf_dir, li):
     """TPC-H Q17 shape — small-quantity order revenue: a correlated
     per-part average consumed as a filter bound (decorrelated to one
     aggregate + one self-equi-join, the standard rewrite).
@@ -1571,8 +1416,14 @@ def rel_q17_small_qty_revenue(spark, sf_dir):
     partitioning — ONE exchange feeds both the aggregate and the join
     (Spark reuses it under AQE); the brand dim filter broadcasts. The
     global sum is a single-row reduce, DECIMAL-exact.
+
+    ``rel_q17_small_qty_revenue_bucketed`` reads a lineitem copy
+    bucketed by l_partkey (:func:`_layout` — the second key it
+    demonstrates; the layout generalizes per (table, key)): BOTH fact
+    reads are partkey-keyed, so the layout removes BOTH fact-side
+    Exchanges and the whole query runs bucket-local until the final
+    one-row reduce (locality asserted in tests/test_bucketed.py).
     """
-    li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#2")
     avg_qty = li.groupBy(F.col("l_partkey").alias("__pk")).agg(
         (F.lit(0.5) * F.avg("l_quantity")).alias("half_avg")
@@ -1588,44 +1439,14 @@ def rel_q17_small_qty_revenue(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q17_small_qty_revenue_bucketed",
-    """
-    WITH avg_qty AS (
-      SELECT l_partkey, 0.5 * avg(l_quantity) AS half_avg
-      FROM lineitem GROUP BY l_partkey)
-    SELECT CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
-             AS avg_yearly,
-           count(*) AS n_small
-    FROM lineitem l
-      JOIN part p ON l.l_partkey = p.p_partkey
-      JOIN avg_qty a ON a.l_partkey = l.l_partkey
-    WHERE p.p_brand = 'Brand#2' AND l.l_quantity < a.half_avg
-    """,
+register("rel_q17_small_qty_revenue", _Q17_SQL)(
+    lambda spark, sf_dir: _q17(spark, sf_dir, _t(spark, sf_dir, "lineitem"))
 )
-def rel_q17_small_qty_revenue_bucketed(spark, sf_dir):
-    """Q17 over a lineitem copy bucketed by l_partkey: identical
-    semantics to rel_q17_small_qty_revenue, but BOTH fact reads — the
-    per-part average aggregate AND the probe side of the
-    decorrelated self-join — are partkey-keyed, so the bucketed layout
-    removes BOTH fact-side Exchanges (the whole query runs bucket-
-    local until the final one-row reduce; locality asserted in
-    tests/test_bucketed.py). The second key demonstrated on
-    :func:`_layout` — the layout generalizes per (table, key)."""
-    li = _layout(spark, sf_dir, "lineitem", "l_partkey")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#2")
-    avg_qty = li.groupBy(F.col("l_partkey").alias("__pk")).agg(
-        (F.lit(0.5) * F.avg("l_quantity")).alias("half_avg")
+register("rel_q17_small_qty_revenue_bucketed", _Q17_SQL)(
+    lambda spark, sf_dir: _q17(
+        spark, sf_dir, _layout(spark, sf_dir, "lineitem", "l_partkey")
     )
-    return (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
-        .join(avg_qty, li["l_partkey"] == F.col("__pk"))
-        .filter(F.col("l_quantity") < F.col("half_avg"))
-        .agg(
-            (F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double") / F.lit(7.0)).alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_small"),
-        )
-    )
+)
 
 
 @register(
@@ -1693,9 +1514,11 @@ def _q21_sole_late_suppliers(li):
     self-join read lineitem three times and paid an l_orderkey
     exchange + sort per sort-merge leg; this is one scan and two
     nested aggregations — (l_orderkey, l_suppkey) then l_orderkey, the
-    second satisfied by the first's partitioning (subset clustering),
-    so ONE exchange total on the plain layout and ZERO on the
-    orderkey-bucketed one.
+    second satisfied by the first's partitioning (subset clustering).
+    On the orderkey-bucketed layout that is ZERO exchanges, and only
+    :func:`rel_q21_waiting_suppliers_bucketed` runs it; on a plain
+    scan it would still pay one exchange, which lost the A/B recorded
+    in :func:`rel_q21_waiting_suppliers`.
 
     Returns (l_orderkey, l_suppkey, __wait_rows) — the sole-late
     supplier of each qualifying order with its driving-row count.
@@ -1719,9 +1542,7 @@ def _q21_sole_late_suppliers(li):
     ).select("l_orderkey", "l_suppkey", "__wait_rows")
 
 
-@register(
-    "rel_q21_waiting_suppliers",
-    """
+_Q21_SQL = """
     SELECT s.s_name AS s_name, count(*) AS numwait
     FROM lineitem l1
       JOIN orders o ON o.o_orderkey = l1.l_orderkey AND o.o_orderstatus = 'F'
@@ -1738,8 +1559,10 @@ def _q21_sole_late_suppliers(li):
     GROUP BY s.s_name
     ORDER BY numwait DESC, s_name ASC
     LIMIT 100
-    """,
-)
+    """
+
+
+@register("rel_q21_waiting_suppliers", _Q21_SQL)
 def rel_q21_waiting_suppliers(spark, sf_dir):
     """TPC-H Q21 shape — suppliers who alone held up multi-supplier
     orders: the EXISTS + NOT-EXISTS double self-join on the fact table
@@ -1801,34 +1624,14 @@ def rel_q21_waiting_suppliers(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q21_waiting_suppliers_bucketed",
-    """
-    SELECT s.s_name AS s_name, count(*) AS numwait
-    FROM lineitem l1
-      JOIN orders o ON o.o_orderkey = l1.l_orderkey AND o.o_orderstatus = 'F'
-      JOIN supplier s ON s.s_suppkey = l1.l_suppkey
-      JOIN nation n ON n.n_nationkey = s.s_nationkey AND n.n_name = 'NATION_3'
-    WHERE l1.l_returnflag = 'R'
-      AND EXISTS (SELECT 1 FROM lineitem l2
-                  WHERE l2.l_orderkey = l1.l_orderkey
-                    AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                      WHERE l3.l_orderkey = l1.l_orderkey
-                        AND l3.l_suppkey <> l1.l_suppkey
-                        AND l3.l_returnflag = 'R')
-    GROUP BY s.s_name
-    ORDER BY numwait DESC, s_name ASC
-    LIMIT 100
-    """,
-)
+@register("rel_q21_waiting_suppliers_bucketed", _Q21_SQL)
 def rel_q21_waiting_suppliers_bucketed(spark, sf_dir):
     """Q21 on the bucketed layout — the shape that wants it most.
 
-    Same one-pass aggregate rewrite as the plain variant
-    (:func:`_q21_sole_late_suppliers`), reading the orderkey-bucketed
-    lineitem copy (:func:`_layout` — shared with Q18/Q8, so
-    the layout write is amortized across four queries): the bucket
+    Runs the one-pass aggregate rewrite (:func:`_q21_sole_late_suppliers`)
+    that the plain variant keeps out (see its r15 A/B), reading the
+    orderkey-bucketed lineitem copy (:func:`_layout` — shared with
+    Q18/Q8, so the layout write is amortized across four queries): the bucket
     partitioning satisfies BOTH nested aggregations (subset
     clustering for (l_orderkey, l_suppkey), exact for l_orderkey) and
     the orders(F) semi against the o_orderkey-bucketed copy at the
@@ -1836,9 +1639,8 @@ def rel_q21_waiting_suppliers_bucketed(spark, sf_dir):
     (plan-asserted in tests/test_bucketed.py), and — since the r15
     rewrite — ONE lineitem scan where the double self-join read three.
     The only shuffles left are the tiny s_name aggregate and the
-    broadcast of the nation-filtered supplier dim. Join logic and
-    tie-breaks are identical to the plain variant (equality test) —
-    only the physical layout differs.
+    broadcast of the nation-filtered supplier dim. Results and
+    tie-breaks are identical to the plain variant (shared oracle).
     """
     li = _layout(spark, sf_dir, "lineitem", "l_orderkey")
     cand = _q21_sole_late_suppliers(
@@ -1863,9 +1665,7 @@ def rel_q21_waiting_suppliers_bucketed(spark, sf_dir):
     )
 
 
-@register(
-    "rel_q20_dominant_suppliers",
-    """
+_Q20_SQL = """
     WITH ship AS (
       SELECT l_partkey, l_suppkey,
              sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
@@ -1887,9 +1687,10 @@ def rel_q21_waiting_suppliers_bucketed(spark, sf_dir):
       JOIN nation n ON n.n_nationkey = s.s_nationkey
         AND n.n_name = 'NATION_3'
     WHERE EXISTS (SELECT 1 FROM dominant d WHERE d.l_suppkey = s.s_suppkey)
-    """,
-)
-def rel_q20_dominant_suppliers(spark, sf_dir):
+    """
+
+
+def _q20(spark, sf_dir, li):
     """TPC-H Q20 shape — suppliers eligible for a part promotion: a
     per-(part, supplier) aggregate compared against a per-part bound,
     feeding a semi-join into the supplier dim (no partsupp table here,
@@ -1904,10 +1705,20 @@ def rel_q20_dominant_suppliers(spark, sf_dir):
     the surviving supplier keys dedup small and semi-join the
     nation-filtered supplier dim. The 2·qty > total comparison is
     DECIMAL-exact on both engines.
+
+    ``rel_q20_dominant_suppliers_bucketed`` is a free rider on Q17's
+    partkey-bucketed layout: the (l_partkey, l_suppkey) aggregate's
+    required clustering is SATISFIED by hash-partitioning on l_partkey
+    alone (every row of a (part, supplier) group shares the part key),
+    so the copy Q17 wrote serves the fact aggregate AND the per-part
+    window bound with zero fact-side Exchange — the amortization
+    argument for layout at 100 TB: one write, every partkey-clustered
+    shape (aggregate, window, join) rides it. The date filter prunes at
+    the scan as usual (bucketing does not cost pushdown).
     """
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = li.filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
@@ -1934,72 +1745,14 @@ def rel_q20_dominant_suppliers(spark, sf_dir):
     ).select("s_name", "s_suppkey", F.col("s_acctbal").cast("double").alias("s_acctbal"))
 
 
-@register(
-    "rel_q20_dominant_suppliers_bucketed",
-    """
-    WITH ship AS (
-      SELECT l_partkey, l_suppkey,
-             sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-      GROUP BY 1, 2),
-    dominant AS (
-      SELECT DISTINCT ship.l_suppkey
-      FROM ship
-        JOIN (SELECT l_partkey, sum(qty) AS part_qty
-              FROM ship GROUP BY 1) tot
-          ON tot.l_partkey = ship.l_partkey
-        JOIN part p ON p.p_partkey = ship.l_partkey
-          AND p.p_name LIKE '%a%'
-      WHERE 2 * ship.qty > tot.part_qty)
-    SELECT s.s_name, s.s_suppkey, CAST(s.s_acctbal AS DOUBLE) AS s_acctbal
-    FROM supplier s
-      JOIN nation n ON n.n_nationkey = s.s_nationkey
-        AND n.n_name = 'NATION_3'
-    WHERE EXISTS (SELECT 1 FROM dominant d WHERE d.l_suppkey = s.s_suppkey)
-    """,
+register("rel_q20_dominant_suppliers", _Q20_SQL)(
+    lambda spark, sf_dir: _q20(spark, sf_dir, _t(spark, sf_dir, "lineitem"))
 )
-def rel_q20_dominant_suppliers_bucketed(spark, sf_dir):
-    """Q20 on the partkey-bucketed layout — a free rider on Q17's
-    layout: the big (l_partkey, l_suppkey) aggregate's required
-    clustering is SATISFIED by hash-partitioning on l_partkey alone
-    (every row of a (part, supplier) group shares the part key), so
-    the same bucketed copy Q17 wrote serves Q20's fact aggregate AND
-    the per-part window bound with zero fact-side Exchange — this is
-    the amortization argument for layout at 100 TB: one write, every
-    partkey-clustered shape (aggregate, window, join) rides it. The
-    date filter prunes at the scan as usual (bucketing does not cost
-    pushdown). Logic identical to :func:`rel_q20_dominant_suppliers`
-    (equality via shared oracle); only the physical layout differs.
-    """
-    from pyspark.sql import Window
-
-    li = _layout(spark, sf_dir, "lineitem", "l_partkey").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+register("rel_q20_dominant_suppliers_bucketed", _Q20_SQL)(
+    lambda spark, sf_dir: _q20(
+        spark, sf_dir, _layout(spark, sf_dir, "lineitem", "l_partkey")
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%a%")).select(
-        "p_partkey"
-    )
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
-    s = _t(spark, sf_dir, "supplier").join(
-        F.broadcast(n), F.col("s_nationkey") == n["n_nationkey"]
-    )
-    ship = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty")
-    )
-    w = Window.partitionBy("l_partkey")
-    dominant = (
-        ship.join(F.broadcast(p), ship["l_partkey"] == p["p_partkey"], "left_semi")
-        .withColumn("part_qty", F.sum("qty").over(w))
-        .filter(F.lit(2) * F.col("qty") > F.col("part_qty"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    return s.join(
-        dominant, s["s_suppkey"] == dominant["l_suppkey"], "left_semi"
-    ).select("s_name", "s_suppkey", F.col("s_acctbal").cast("double").alias("s_acctbal"))
+)
 
 
 @register(

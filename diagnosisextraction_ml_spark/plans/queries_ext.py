@@ -5776,29 +5776,12 @@ _scorecard_entry()
 def _ab_test_entry() -> None:
     from diagnosisextraction_ml_spark.operators import experiment
 
-    sql = """
-    WITH u AS (
-      SELECT user_id,
-             max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-      FROM events GROUP BY 1
-    ), agg AS (
-      SELECT
-        CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n_0,
-        CAST(sum(CASE WHEN user_id % 2 = 0 AND conv = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS x_0,
-        CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n_1,
-        CAST(sum(CASE WHEN user_id % 2 = 1 AND conv = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS x_1
-      FROM u
-    )
-    SELECT CAST(n_0 AS BIGINT) AS n_0, CAST(x_0 AS BIGINT) AS x_0,
-           CAST(n_1 AS BIGINT) AS n_1, CAST(x_1 AS BIGINT) AS x_1,
-           CAST(CASE WHEN (x_1 * n_0 - x_0 * n_1) < 0 THEN -1 ELSE 1 END
-                * ((1000000 * abs(x_1 * n_0 - x_0 * n_1)) // (n_0 * n_1))
-                AS BIGINT) AS diff_micro,
-           (625 * (n_0 + n_1) * (x_1 * n_0 - x_0 * n_1) * (x_1 * n_0 - x_0 * n_1))
-             > (2401 * (x_0 + x_1) * ((n_0 + n_1) - (x_0 + x_1)) * (n_0 * n_1))
-             AS significant
-    FROM agg
-    """
+    sql = experiment.two_proportion_test_sql("""
+    u AS (
+      SELECT user_id % 2 AS arm,
+             max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
+      FROM events GROUP BY user_id
+    )""")
 
     def _fn(spark, sf_dir):
         ev = _t(spark, sf_dir, "events")
@@ -7106,37 +7089,19 @@ _wau_entry()
 def _ab_funnel_entry() -> None:
     from diagnosisextraction_ml_spark.operators import experiment
 
-    sql = """
-    WITH v AS (
+    sql = experiment.two_proportion_test_sql("""
+    v AS (
       SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t0
       FROM events WHERE event_type = 'view' GROUP BY 1
     ),
     u AS (
-      SELECT v.user_id,
+      SELECT v.user_id % 2 AS arm,
              max(CASE WHEN e.event_type = 'purchase'
                        AND CAST(e.ts AS TIMESTAMP) >= v.t0
-                      THEN 1 ELSE 0 END) AS conv
+                      THEN 1 ELSE 0 END) AS converted
       FROM v LEFT JOIN events e ON e.user_id = v.user_id
-      GROUP BY 1
-    ),
-    agg AS (
-      SELECT
-        CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n_0,
-        CAST(sum(CASE WHEN user_id % 2 = 0 AND conv = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS x_0,
-        CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n_1,
-        CAST(sum(CASE WHEN user_id % 2 = 1 AND conv = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS x_1
-      FROM u
-    )
-    SELECT CAST(n_0 AS BIGINT) AS n_0, CAST(x_0 AS BIGINT) AS x_0,
-           CAST(n_1 AS BIGINT) AS n_1, CAST(x_1 AS BIGINT) AS x_1,
-           CAST(CASE WHEN (x_1 * n_0 - x_0 * n_1) < 0 THEN -1 ELSE 1 END
-                * ((1000000 * abs(x_1 * n_0 - x_0 * n_1)) // (n_0 * n_1))
-                AS BIGINT) AS diff_micro,
-           (625 * (n_0 + n_1) * (x_1 * n_0 - x_0 * n_1) * (x_1 * n_0 - x_0 * n_1))
-             > (2401 * (x_0 + x_1) * ((n_0 + n_1) - (x_0 + x_1)) * (n_0 * n_1))
-             AS significant
-    FROM agg
-    """
+      GROUP BY v.user_id
+    )""")
 
     def _fn(spark, sf_dir):
         ev = _t(spark, sf_dir, "events")

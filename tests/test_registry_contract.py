@@ -5,6 +5,7 @@ real views, and the spotlight must reference real queries."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 from diagnosisextraction_ml_spark.plans.queries import (
     DRIVER_SPOTLIGHT,
@@ -47,3 +48,15 @@ def test_every_registered_query_has_an_oracle():
     every queries() key must have an oracle_sql() twin."""
     qs, oracles = queries(), oracle_sql()
     assert sorted(set(qs) - set(oracles)) == []
+
+
+def test_register_rejects_a_name_already_registered(monkeypatch):
+    """A second ``register`` of a taken name must fail loudly: silently
+    replacing the entry would drop a query from the registry."""
+    from diagnosisextraction_ml_spark.plans import queries as registry
+
+    monkeypatch.setattr(registry, "_REGISTRY", dict(registry._REGISTRY))
+    before = registry._REGISTRY["rel_q1_pricing"]
+    with pytest.raises(ValueError, match="rel_q1_pricing"):
+        registry.register("rel_q1_pricing", None)(lambda spark, sf_dir: None)
+    assert registry._REGISTRY["rel_q1_pricing"] == before
