@@ -241,6 +241,8 @@ def auc_trapezoid(
     :func:`auc_rank` (exact rank arithmetic, fully distributed);
     trapezoid segments are not exactly representable, so a distributed
     float sum would trade bit-stability for nothing this op needs.
+    The curve is coalesced to one partition before the window, so the
+    window needs no ``Exchange SinglePartition`` (one job, not two).
     """
     w = Window.orderBy(F.col(x_col).asc(), F.col(y_col).asc())
     x, y = F.col(x_col), F.col(y_col)
@@ -250,7 +252,7 @@ def auc_trapezoid(
         lx = F.coalesce(lx, F.lit(0.0))
         ly = F.coalesce(ly, F.lit(0.0))
     seg = (x - lx) * (y + ly) / 2.0
-    return curve.select(seg.alias("seg")).agg(F.sum("seg").alias("auc"))
+    return curve.coalesce(1).select(seg.alias("seg")).agg(F.sum("seg").alias("auc"))
 
 
 def auc_rank(
